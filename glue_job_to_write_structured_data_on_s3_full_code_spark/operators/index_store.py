@@ -1,18 +1,15 @@
-"""Generational stored-IVF index — the object-store-safe commit protocol.
+"""Generational stored-IVF index — the engine's one stored ANN index.
 
-The sibling lifecycle in :mod:`.similarity` (build/append/compact/
-rebalance/repair) publishes by POSIX rename under an O_EXCL writer lock;
-COVERAGE.md's "Filesystem contract" table documents why none of that
-transfers to an object store (no atomic rename, no exclusive create on
-the data path), and `_require_posix_warehouse` refuses such schemes
-loudly. This module is the contract-honest alternative from the same
-document's "Object-store commit design", implemented and tested:
+The cell-partitioned IVF layout of :func:`.similarity.ivf_topk`, written
+once and served many times, with a commit protocol that holds on any
+filesystem Spark can reach (local, HDFS, S3/GCS/ABFS through the Hadoop
+connectors): nothing is ever renamed, locked, or modified in place.
 
 - **Immutable generations.** Every mutation writes a COMPLETE new
   generation under a never-reused prefix ``gen-<hex>/`` (cell parquet +
   centroids + manifest). Published data is never renamed, moved, or
-  modified — the entire crash-window taxonomy of the POSIX store
-  (asides, staged moves, torn fingerprints) has nothing to attach to.
+  modified — there are no asides, staged moves, or torn metadata files
+  for a crash to leave behind.
 - **Sequenced-pointer commit.** The live generation is named by the
   highest-sequence pointer object ``ptr/LATEST.<seq>``. Commit = create
   the NEXT sequence exactly-once; the create either happens (commit) or
@@ -36,8 +33,8 @@ document's "Object-store commit design", implemented and tested:
 - **Multi-writer appends.** Losing the pointer race triggers a REBASE:
   the staged generation's manifest is recomposed against the new latest
   (files are immutable, so only the manifest and the XOR-composed
-  fingerprint change) and the commit retries at the next sequence. The
-  POSIX store's single-writer contract becomes optimistic concurrency.
+  fingerprint change) and the commit retries at the next sequence:
+  optimistic concurrency instead of a single-writer lock.
 - **History for free.** Because every pointer names a full immutable
   snapshot, retained sequences are directly servable:
   :func:`gen_index_probe` ``as_of_seq=`` time-travels to a past commit
@@ -57,10 +54,10 @@ FileSystem connectors — so any scheme the cluster can read
 
 Semantics (centroid rule, assignment tie-breaks, cosine rounding, rank
 ordering) are IDENTICAL to :func:`.similarity.ivf_topk` — pinned by a
-row-identity test against :func:`.similarity.ivf_index_probe` over the
-same corpus. Reference parity: this serves the same "write structured
-data to S3, query it back" north star as the reference's S3 parquet
-snapshots (FULL.py:72, JDBC.sql:90); the commit design is the
+row-identity test and by the DuckDB oracles of the registered queries
+in plans/gen_serving.py. Reference parity: this serves the same "write
+structured data to S3, query it back" north star as the reference's S3
+parquet snapshots (FULL.py:72, JDBC.sql:90); the commit design is the
 Iceberg/Delta-style metadata-pointer pattern, public knowledge.
 """
 
@@ -69,24 +66,20 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import spread_small_input
+from ..sources.parquet import _app_staging_dir, _require_posix_warehouse
 from .similarity import (
-    _as_double,
     _as_double_name,
-    _cosine_cols,
     _cosine_pre,
-    _norm_col,
-    _corpus_fingerprint,
-    _dot,
-    _fp_core,
     _ivf_assign,
     _ivf_centroids,
-    _ivf_index_path,
-    _require_posix_warehouse,
+    _norm_col,
 )
 
 __all__ = [
@@ -96,6 +89,7 @@ __all__ = [
     "S3PointerStore",
     "gen_index_build",
     "gen_index_built",
+    "gen_index_head",
     "gen_index_append",
     "gen_index_cell_skew",
     "gen_index_probe",
@@ -103,8 +97,27 @@ __all__ = [
     "gen_index_verify",
     "gen_index_gc",
     "gen_index_compact",
-    "gen_index_import_posix",
 ]
+
+
+def _corpus_fingerprint(df: DataFrame, id_col: str) -> dict:
+    """Order-independent corpus identity: row count + bit_xor of 64-bit id
+    hashes. One column-pruned scan, one single-row collect. XOR composes
+    under append (fp(A ∪ B).id_xor == fp(A).id_xor ^ fp(B).id_xor), which
+    is what lets :func:`gen_index_append` advance the committed
+    fingerprint without rescanning the index."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.expr(f"bit_xor(xxhash64({id_col}))").alias("id_xor"),
+    ).collect()[0]
+    return {"rows": int(row["rows"]), "id_xor": int(row["id_xor"] or 0)}
+
+
+def _fp_core(fp: dict) -> dict:
+    """The corpus-identity projection of a fingerprint. Pointer payloads
+    and manifests may carry bookkeeping beyond identity; probes compare
+    identity only."""
+    return {"rows": fp["rows"], "id_xor": fp["id_xor"]}
 
 
 class CommitConflict(RuntimeError):
@@ -831,6 +844,9 @@ class _HadoopFS:
             spark._jsc.hadoopConfiguration()
         )
 
+    def is_local(self) -> bool:
+        return self._fs.getScheme() == "file"
+
     def _is_missing(self, exc: Exception) -> bool:
         """True iff a py4j-raised Java exception is a FileNotFound —
         the ONLY failure the metadata helpers may swallow. A throttling
@@ -948,7 +964,7 @@ def _store_root(spark: SparkSession, index_name: str) -> str:
     on one index: the protocol keeps no in-memory state, so any process
     that can reach the root participates safely in the same CAS
     sequence (pinned by the cross-application test)."""
-    return _ivf_index_path(spark, f"{index_name}_gens")
+    return os.path.join(_app_staging_dir(spark), f"{index_name}_gens")
 
 
 def _resolve_root(
@@ -1049,12 +1065,10 @@ def gen_index_build(
     commits ONLY at the sequence it started from +1 and raises
     :class:`CommitConflict` if the index advanced meanwhile — the caller
     re-derives the corpus (which now must include the interleaved
-    batches) and rebuilds. This is the optimistic-concurrency analog of
-    the POSIX build holding the writer lock for its whole span. The
-    previous append token is carried forward exactly like
-    :func:`.similarity.build_ivf_index` (the rebuild-from-full-corpus
-    repair flow must keep replay detection armed) — sound precisely
-    BECAUSE the commit refuses when a tokened append interleaves."""
+    batches) and rebuilds. The previous append token is carried forward
+    (a rebuild from the full corpus must keep replay detection armed) —
+    sound precisely BECAUSE the commit refuses when a tokened append
+    interleaves."""
     spark = corpus.sparkSession
     root = _resolve_root(spark, index_name, root, store)
     fs = _HadoopFS(spark, root)
@@ -1127,12 +1141,24 @@ def gen_index_built(
 ) -> bool:
     """True iff the named generational index has a committed generation —
     one pointer read, the build-once gate callers (bench loop, a probe
-    service warmup) use before serving. Unlike the POSIX
-    :func:`.similarity.ivf_index_built` there is no session-local build
+    service warmup) use before serving. There is no session-local build
     set to consult: the pointer IS the state, wherever it lives."""
+    return gen_index_head(spark, index_name, root, store)[0] is not None
+
+
+def gen_index_head(
+    spark: SparkSession,
+    index_name: str = "gen_ivf",
+    root: str | None = None,
+    store=None,
+) -> tuple[int | None, dict | None]:
+    """``(seq, payload)`` of the head commit, or ``(None, None)`` for an
+    index that never committed — one pointer read, no manifest or parquet
+    I/O. The payload carries the committed corpus ``fingerprint``
+    (``rows`` + ``id_xor``), so lifecycle callers can check completion
+    and replay position without reading the commit ledger."""
     root = _resolve_root(spark, index_name, root, store)
-    seq, _latest = _store_for(root, store).read_latest()
-    return seq is not None
+    return _store_for(root, store).read_latest()
 
 
 def gen_index_append(
@@ -1154,8 +1180,8 @@ def gen_index_append(
     the new latest changed the centroid set (a rebuild/compact won),
     in which case the staged assignment is invalid and the whole append
     restages from scratch. ``idempotency_token`` keeps foreachBatch's
-    at-least-once replays exactly-once, same single-token lookback
-    contract as the POSIX store; the replay check re-runs inside every
+    at-least-once replays exactly-once (single-token lookback: the
+    head's ``last_token``); the replay check re-runs inside every
     CAS attempt, so a duplicate delivery that loses a race to its twin
     discards itself instead of double-appending."""
     spark = batch.sparkSession
@@ -1253,8 +1279,33 @@ def gen_index_append(
     )
 
 
+def _read_files(
+    spark: SparkSession, fs: _HadoopFS, paths: list[str], schema=None
+) -> DataFrame:
+    """``spark.read.parquet`` over manifest-listed files (with ``schema``
+    given, no schema-inference job). The manifest already names every
+    file, so Spark's listing of them is only a status call per file. Past ``parallelPartitionDiscovery.threshold`` paths
+    Spark makes that a distributed listing job; on a local filesystem the
+    driver-side stats are far cheaper than the job, so the threshold is
+    lifted for this read. Other schemes keep Spark's choice: sequential
+    object-store HEADs on the driver would not scale with the file count."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    if not fs.is_local():
+        return reader.parquet(*paths)
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(len(paths)))
+    try:
+        return reader.parquet(*paths)  # the listing happens here
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def _probe_files(
-    spark: SparkSession, root: str, manifest: dict, cells: list[str]
+    spark: SparkSession, fs: _HadoopFS, root: str, manifest: dict, cells: list[str]
 ):
     files = [
         os.path.join(root, rel)
@@ -1263,7 +1314,7 @@ def _probe_files(
     ]
     if not files:
         return None
-    return spark.read.parquet(*files)
+    return _read_files(spark, fs, files)
 
 
 def gen_index_probe(
@@ -1280,11 +1331,16 @@ def gen_index_probe(
 ) -> DataFrame:
     """Serve top-k from the pointed generation. One pointer read pins the
     ENTIRE snapshot (manifest + files are immutable), so a probe can
-    never observe a half-published mutation — the reader-exclusion
-    caveat the POSIX store documents for rebalance/compact windows does
-    not exist here. Reads exactly the probed cells' manifest files.
-    Output schema and values are row-identical to
-    :func:`.similarity.ivf_index_probe` (pinned by test).
+    never observe a half-published mutation, even one racing a
+    rebalance or compaction. Reads exactly the probed cells' manifest
+    files. Output schema and values are row-identical to the in-memory
+    :func:`.similarity.ivf_topk` over the same corpus (pinned by test).
+
+    ``expected_fingerprint`` is the misuse guard: pass the corpus
+    fingerprint the caller believes the index serves
+    (:func:`_corpus_fingerprint`, one small aggregate job) and a
+    mismatch with the committed one raises instead of silently answering
+    for a different corpus.
 
     ``as_of_seq`` is the TIME-TRAVEL dial: probe the snapshot a PAST
     commit published (e.g. reproduce exactly the shortlist a prior
@@ -1334,7 +1390,7 @@ def gen_index_probe(
     )
     # ONE execution of the assignment job, but only the DISTINCT probed
     # cell ids ever reach the driver for manifest pruning (≤
-    # centroid-count rows, ≤ max_centroids — bounded regardless of
+    # centroid-count values, ≤ max_centroids — bounded regardless of
     # |queries|). The eager lineage break materializes the assignment
     # once; the join reuses it instead of re-running the
     # queries×centroids scoring. NOTE the JOIN side is still
@@ -1344,21 +1400,28 @@ def gen_index_probe(
     # the very OOM the collect fix avoids); above it, AQE picks the
     # strategy from measured sizes — big recall sweeps degrade to a
     # shuffled join instead of a driver blowup.
+    from pyspark.sql import Observation
+
     from ..session import eager_checkpoint
 
-    q = eager_checkpoint(q_plan, "gen_probe_assignment")
-    # one bounded collect serves all three needs: the probed cell ids,
-    # the shortlist row count, AND the vector width (≤ max_centroids
-    # rows come back, never the shortlist itself)
-    cell_counts = (
-        q.groupBy("cent_id")
-        .agg(F.count("*").alias("count"), F.max(F.size("qv")).alias("dim"))
-        .collect()
+    # the checkpoint's own job also observes all three needs: the probed
+    # cell ids, the shortlist row count, AND the vector width (≤
+    # max_centroids ids come back, never the shortlist itself)
+    seen = Observation()
+    q = eager_checkpoint(
+        q_plan.observe(
+            seen,
+            F.collect_set("cent_id").alias("cells"),
+            F.count(F.lit(1)).alias("n"),
+            F.max(F.size("qv")).alias("dim"),
+        ),
+        "gen_probe_assignment",
     )
-    probed = sorted(str(r["cent_id"]) for r in cell_counts)
-    n_shortlist = sum(r["count"] for r in cell_counts)
-    dim = max((r["dim"] or 0) for r in cell_counts) if cell_counts else 0
-    index = _probe_files(spark, root, manifest, probed)
+    stats = seen.get
+    probed = sorted(str(c) for c in stats["cells"])
+    n_shortlist = stats["n"]
+    dim = stats["dim"] or 0
+    index = _probe_files(spark, fs, root, manifest, probed)
     if index is None:
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, cosine double, rank int"
@@ -1427,7 +1490,7 @@ def gen_index_verify(
     )
     if all_files and not missing:
         actual = _corpus_fingerprint(
-            spark.read.parquet(*[os.path.join(root, rel) for rel in all_files]),
+            _read_files(spark, fs, [os.path.join(root, rel) for rel in all_files]),
             "neighbor_id",
         )
     else:
@@ -1773,106 +1836,6 @@ def gen_index_gc(
     }
 
 
-def gen_index_import_posix(
-    spark: SparkSession,
-    posix_index_name: str = "ivf_index",
-    index_name: str = "gen_ivf",
-    root: str | None = None,
-    store=None,
-) -> dict:
-    """Migrate a POSIX-store IVF index into the generational protocol —
-    the deployment step when an index built under the rename/lock
-    contract moves to an object store. No reassignment runs: the rows
-    already carry their cells (the POSIX partition column), so this is
-    one relayout write into a generation plus metadata carry-over — the
-    stored FINGERPRINT (so probes keep verifying against the same
-    corpus identity) and the append TOKEN (so a foreachBatch producer
-    switched over mid-stream still has its last delivery's replay
-    detected by the new store). Commits like a build: only at the
-    sequence read at the start, raising :class:`CommitConflict` if the
-    target index advanced meanwhile.
-
-    The SOURCE is mutable POSIX state, so the whole read span (stored
-    fingerprint + row scan + centroids) runs under the POSIX writer
-    lock — a concurrent POSIX append landing between the fingerprint
-    read and the row scan would otherwise commit a generation holding
-    the batch's rows under a pre-batch fingerprint AND token, and the
-    producer's replay of that batch against the new store would then
-    re-append it undetected. Belt-and-braces, the copied rows' content
-    fingerprint is recomputed and must equal the stored one (catches a
-    source index that was already inconsistent — run
-    :func:`.similarity.ivf_index_verify`/``ivf_index_repair`` first)."""
-    from .similarity import _index_write_lock
-    from .similarity import _ivf_index_path as _posix_path
-    from .similarity import _read_fingerprint
-
-    root = _resolve_root(spark, index_name, root, store)
-    fs = _HadoopFS(spark, root)
-    ptr = _store_for(root, store)
-    start_seq, start_latest = ptr.read_latest()
-
-    posix = _posix_path(spark, posix_index_name)
-    gen_name = f"gen-{uuid.uuid4().hex}"
-    gen_dir = os.path.join(root, gen_name)
-    with _index_write_lock(posix):
-        stored_fp = _read_fingerprint(posix)
-        rows = spark.read.parquet(posix).select(
-            "neighbor_id", "cv", F.col("cell_id").cast("long").alias("cell_id")
-        )
-        cents = spark.read.parquet(f"{posix}__meta/centroids")
-        _write_assigned_cells(rows, gen_dir)
-        cents.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(gen_dir, "centroids")
-        )
-    cent_fp = _corpus_fingerprint(
-        spark.read.parquet(os.path.join(gen_dir, "centroids")), "cent_id"
-    )
-    fp = _fp_core(stored_fp)
-    copied = _list_cell_files(fs, gen_dir, gen_name)
-    copied_files = [
-        os.path.join(root, rel) for files in copied.values() for rel in files
-    ]
-    actual_fp = (
-        _corpus_fingerprint(spark.read.parquet(*copied_files), "neighbor_id")
-        if copied_files
-        else {"rows": 0, "id_xor": 0}
-    )
-    if actual_fp != fp:
-        _sweep_unpointed(fs, gen_dir)
-        raise ValueError(
-            f"POSIX index '{posix_index_name}' content {actual_fp} does not "
-            f"match its stored fingerprint {fp} — the source is "
-            "inconsistent; run ivf_index_verify / ivf_index_repair on it "
-            "before importing"
-        )
-    manifest = {
-        "kind": "import",
-        "cells": copied,
-        "fingerprint": fp,
-        "centroid_fp": cent_fp,
-        "centroids": f"{gen_name}/centroids",
-        "imported_from": posix_index_name,
-    }
-    _write_manifest(fs, gen_dir, manifest)
-    payload = {
-        "gen": gen_name,
-        "fingerprint": fp,
-        "centroid_fp": cent_fp,
-        # token precedence: the POSIX index's token is the migrating
-        # producer's last delivery; an existing gen-store token (import
-        # over a live gen index) is superseded by the imported content
-        "last_token": stored_fp.get("last_token"),
-    }
-    if ptr.try_commit((start_seq or 0) + 1, payload):
-        return payload
-    fs.delete(gen_dir)
-    raise CommitConflict(
-        f"generational index '{index_name}' advanced while the import "
-        f"from POSIX index '{posix_index_name}' was staging — re-run the "
-        "import (or reconcile which store is authoritative first)"
-    )
-
-
 def gen_index_cell_skew(
     spark: SparkSession,
     index_name: str = "gen_ivf",
@@ -1880,16 +1843,24 @@ def gen_index_cell_skew(
     root: str | None = None,
     store=None,
 ) -> DataFrame:
-    """Per-cell drift report for a generational index — the analog of
-    :func:`.similarity.ivf_cell_skew_audit`, except the BASELINE is not
-    a separate stored artifact: the pointer history IS the baseline
-    store. Compares the live snapshot's per-cell row counts against the
-    generation pointed at by ``baseline_seq`` (default: the OLDEST
-    surviving pointer, i.e. the furthest-back history GC has kept).
-    Columns: ``cell_id, rows_then, rows_now, added, growth`` (``growth``
-    NULL for a cell born after the baseline). Two column-pruned reads of
-    manifest file lists — at scale this is parquet footers plus one tiny
-    shuffle of ≤ centroid-count groups each. Feed the hot cells to
+    """Per-cell drift report for a generational index. Appends against
+    FROZEN centroids never move existing rows, so a drifted batch
+    distribution shows up as unbounded growth of a few hot cells — probe
+    cost per cell rises and recall falls, and without this audit nothing
+    measures it. The BASELINE is not a separate stored artifact: the
+    pointer history IS the baseline store. Compares the live snapshot's
+    per-cell row counts against the generation pointed at by
+    ``baseline_seq`` (default: the OLDEST surviving pointer — the build
+    commit until GC drops it).
+
+    Columns: ``cell_id, rows_at_build, rows_now, added, growth`` —
+    ``rows_at_build`` is the baseline count (0 for a cell born after the
+    baseline), ``growth`` is ``rows_now / rows_at_build`` rounded to 4
+    places (NULL for a newborn cell). This is the schema the registered
+    ``embedding_ivf_cell_skew`` query is hash-checked against. One
+    column-pruned scan of the files either manifest lists, counted per
+    file (≤ manifest-size rows reach the driver); the per-cell sums are
+    composed from the two manifests. Feed the hot cells to
     :func:`gen_index_rebalance`."""
     root = _resolve_root(spark, index_name, root, store)
     fs = _HadoopFS(spark, root)
@@ -1912,43 +1883,57 @@ def gen_index_cell_skew(
             )
         base_payload = by_seq[baseline_seq]
 
-    def counts(payload, alias):
-        manifest = _read_manifest(fs, root, payload["gen"])
-        files = [
-            os.path.join(root, rel)
-            for files in manifest["cells"].values()
-            for rel in files
-        ]
-        if not files:
-            return spark.createDataFrame([], f"cell_id long, {alias} long")
-        return (
-            spark.read.parquet(*files)
-            .groupBy(F.col("cell").cast("long").alias("cell_id"))
-            .agg(F.count(F.lit(1)).alias(alias))
-        )
+    then = _read_manifest(fs, root, base_payload["gen"])["cells"]
+    now = _read_manifest(fs, root, latest["gen"])["cells"]
+    # generations share immutable files, so ONE scan of the union counts
+    # rows per file, and each side's per-cell count is the sum over the
+    # files its manifest lists
+    rels = sorted({rel for m in (then, now) for fl in m.values() for rel in fl})
+    per_file: dict[str, int] = {}
+    if rels:
+        for r in (
+            # no columns: only row counts are read
+            _read_files(
+                spark, fs, [os.path.join(root, rel) for rel in rels], StructType()
+            )
+            .groupBy(F.input_file_name().alias("uri"))
+            .count()
+            .collect()  # bounded: one row per manifest-listed file
+        ):
+            # a manifest path is <gen>/cells/cell_id=<c>/<file>: the URI's
+            # last four segments, whatever the root's spelling
+            per_file[unquote("/".join(r["uri"].rsplit("/", 4)[1:]))] = r["count"]
+        unmapped = set(per_file) - set(rels)
+        if unmapped:  # a silent miss would report those rows as 0
+            raise RuntimeError(
+                f"scanned files do not map to manifest paths: {sorted(unmapped)[:3]}"
+            )
 
-    then = counts(base_payload, "rows_then")
-    now = counts(latest, "rows_now")
-    # full_outer, like the POSIX audit: a cell that exists on only one
-    # side still reports — born after the baseline (rows_then NULL,
-    # growth NULL) or EMPTIED/relaid-out since it (rows_now coalesced to
-    # 0, growth 0.0); a left join driven from the live side would hide
-    # exactly the cells a rebalance drained, inflating sum(added)
-    return (
-        now.join(then, "cell_id", "full_outer")
-        .select(
-            "cell_id",
-            "rows_then",
-            F.coalesce(F.col("rows_now"), F.lit(0)).alias("rows_now"),
-            (
-                F.coalesce(F.col("rows_now"), F.lit(0))
-                - F.coalesce(F.col("rows_then"), F.lit(0))
-            ).alias("added"),
-            (
-                F.coalesce(F.col("rows_now"), F.lit(0)) / F.col("rows_then")
-            ).alias("growth"),
-        )
-        .orderBy(F.col("growth").desc_nulls_first(), "cell_id")
+    def cell_rows(cells: dict[str, list[str]]) -> dict[int, int]:
+        return {int(c): sum(per_file.get(rel, 0) for rel in fl) for c, fl in cells.items()}
+
+    rows_then, rows_now = cell_rows(then), cell_rows(now)
+    # every cell either side knows: born after the baseline
+    # (rows_at_build 0, growth NULL) or EMPTIED/relaid-out since it
+    # (rows_now 0, growth 0.0) — dropping the drained side would hide
+    # exactly the cells a rebalance emptied, inflating sum(added)
+    counts = spark.createDataFrame(
+        [
+            (c, rows_then.get(c, 0), rows_now.get(c, 0))
+            for c in sorted(set(rows_then) | set(rows_now))
+        ],
+        "cell_id long, rows_at_build long, rows_now long",
+    )
+    return counts.select(
+        "cell_id",
+        "rows_at_build",
+        "rows_now",
+        (F.col("rows_now") - F.col("rows_at_build")).alias("added"),
+        F.round(
+            F.col("rows_now")
+            / F.when(F.col("rows_at_build") > 0, F.col("rows_at_build")),
+            4,
+        ).alias("growth"),
     )
 
 
@@ -1963,21 +1948,21 @@ def gen_index_rebalance(
     store=None,
 ) -> list[int]:
     """Split hot cells into ``factor`` sub-cells, as a generational
-    commit. Selection and refinement semantics MIRROR
-    :func:`.similarity.ivf_index_rebalance` (sub-centroids = the
-    ``factor`` smallest-id member vectors per split cell, excluding ids
-    that survive as centroids, iterated to a fixpoint; split rows
-    reassigned max-cosine WITHIN their parent; refined set = kept ∪
-    subs) — pinned row-identical to the POSIX store's rebalanced probe
-    by test. ``cells=None`` selects cells holding more than
+    commit. Refinement is deterministic, so the whole operation is
+    DuckDB-replayable: sub-centroids = the ``factor`` smallest-id member
+    vectors per split cell, excluding ids that survive as centroids,
+    iterated to a fixpoint; split rows are reassigned max-cosine WITHIN
+    their parent; refined set = kept ∪ subs — pinned row-identical to
+    ``_ivf_rebalanced_oracle`` (plans/llm_ops.py) by test and by the
+    registered ``embedding_ivf_rebalanced_topk``. ``cells=None`` selects
+    cells holding more than
     ``hot_factor ×`` the mean cell population of the CURRENT snapshot
     (the generational store has no separate build-time baseline — prior
     generations' manifests ARE the history; pass an explicit list to
     reproduce an audit-driven choice).
 
-    Where the POSIX rebalance needs the single-writer lock across its
-    whole read-stage-swap span plus rename-aside crash handling, this is
-    just another generation: rows unchanged (fingerprint carried), new
+    No lock and no crash handling: this is just another generation —
+    rows unchanged (fingerprint carried), new
     centroid set (``centroid_fp`` changes — which automatically forces
     any concurrently-staged append to RESTAGE rather than land rows in
     dead cells), one pointer create to publish, GC for the history. A
@@ -2009,7 +1994,7 @@ def gen_index_rebalance(
             if not all_files:
                 return []
             counts = (
-                spark.read.parquet(*all_files)
+                _read_files(spark, fs, all_files)
                 .groupBy("cell")
                 .count()
                 .collect()  # bounded: one row per live cell ≤ centroids
@@ -2026,10 +2011,10 @@ def gen_index_rebalance(
         if not split:
             return []
 
-        # sub-centroid fixpoint — same rule as the POSIX rebalance: a
-        # member row whose id survives as a centroid cannot seed a sub-
-        # cell, and a cell left with no candidates leaves the split set
-        # (returning its id to the kept set, so iterate)
+        # sub-centroid fixpoint: a member row whose id survives as a
+        # centroid cannot seed a sub-cell (its id would collide in the
+        # refined set), and a cell left with no candidates leaves the
+        # split set (returning its id to the kept set, so iterate)
         while True:
             kept_ids = sorted(all_cent_ids - set(split))
             split_files = [
@@ -2039,7 +2024,7 @@ def gen_index_rebalance(
             ]
             if not split_files:
                 return []
-            sub_rows = spark.read.parquet(*split_files).select(
+            sub_rows = _read_files(spark, fs, split_files).select(
                 F.col("cell").cast("long").alias("parent"),
                 "neighbor_id",
                 "cv",
@@ -2167,7 +2152,7 @@ def gen_index_compact(
         gen_name = f"gen-{uuid.uuid4().hex}"
         gen_dir = os.path.join(root, gen_name)
         if all_files:
-            live = spark.read.parquet(*all_files).select(
+            live = _read_files(spark, fs, all_files).select(
                 "neighbor_id", "cv", F.col("cell").alias("cell_id")
             )
             _write_assigned_cells(live, gen_dir)
@@ -2225,14 +2210,14 @@ def gen_index_catalog(
 
     Discovery: with no arguments, lists this application's staging dir
     for ``*_gens`` index roots (the :func:`_store_root` convention —
-    POSIX by construction). ``index_names`` resolves each name through
+    local by construction). ``index_names`` resolves each name through
     the default convention; ``root_by_name`` addresses indexes at
     explicit/shared roots (the multi-application deployment), combinable
     with an injected pointer ``store`` like every other entry point.
     """
     if root_by_name is None:
         if index_names is None:
-            app_dir = os.path.dirname(_store_root(spark, "_probe"))
+            app_dir = _app_staging_dir(spark)
             try:
                 children = sorted(os.listdir(app_dir))
             except FileNotFoundError:

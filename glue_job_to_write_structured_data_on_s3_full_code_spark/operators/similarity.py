@@ -673,1671 +673,6 @@ def ivf_topk_curve(
     )
 
 
-#: index paths this session has already built (applicationId-scoped, so
-#: cross-session staleness is impossible); see ivf_partitioned_topk(rebuild=)
-_BUILT_IVF_INDEXES: set[str] = set()
-
-
-class UnsupportedIndexFilesystem(RuntimeError):
-    """The stored-IVF lifecycle was pointed at a filesystem that cannot
-    honor its durability contract. Every crash-atomicity guarantee the
-    index makes — torn-free fingerprint/manifest publish, the
-    single-writer lock, rename-aside/rename-publish swaps in
-    append/compact/rebalance/repair — is built on POSIX primitives
-    (atomic same-directory ``rename(2)`` and ``O_CREAT|O_EXCL``).
-    Object stores (s3/s3a/gs/abfs/...) have NEITHER: "rename" is
-    copy+delete (non-atomic, a crash mid-copy leaves both halves) and
-    there is no exclusive-create file lock, so the index would *appear*
-    to work until the first crash or concurrent writer silently
-    corrupted it. Refusing loudly here beats that. See COVERAGE.md
-    "Stored-IVF filesystem contract" for the primitive-by-primitive
-    contract and the object-store commit design (immutable generation
-    dirs + conditional-put latest pointer)."""
-
-
-def _require_posix_warehouse(
-    uri: str, what: str = "spark.sql.warehouse.dir"
-) -> str:
-    """Enforce the stored-index filesystem contract at the single
-    chokepoint every lifecycle entry point resolves paths through.
-    Accepts local paths (no scheme) and ``file:`` URIs, returning the
-    plain OS path; raises :class:`UnsupportedIndexFilesystem` for any
-    other scheme rather than letting ``os.path.join`` silently treat
-    ``s3a://bucket/...`` as a relative local directory name. ``what``
-    names the offending setting in the error (the generational store
-    routes its explicit ``root=`` through here too)."""
-    import os
-    import re
-
-    # URI-vs-path classification, done by SYNTAX rather than urlsplit's
-    # permissive parse: a plain local path may legally contain a colon in
-    # a segment ('runs:2026/idx' — not a URI: what follows the colon is
-    # not a path-absolute or authority part; 'data/v1:/idx' and
-    # '2026:/idx' — not URIs either: the head is not a legal RFC 3986
-    # scheme), while Hadoop URIs appear both as scheme://authority/path
-    # AND the single-slash scheme:/path form ('hdfs:/user/hive/warehouse'
-    # is common) — BOTH must classify as URIs or a non-file scheme slips
-    # past the refusal and the index splits brain: os.* state under a
-    # local dir literally named 'hdfs:', Spark data on the real
-    # filesystem.
-    if os.path.isabs(uri):
-        return uri  # absolute local path, colons in segments and all
-    head, sep, rest = uri.partition(":")
-    if not sep or not re.fullmatch(r"[A-Za-z][A-Za-z0-9+.\-]*", head):
-        # no colon, or the head cannot be a URI scheme (must be a letter
-        # followed by letters/digits/+/-/.) — a local path either way
-        return uri
-    scheme = head.lower()
-    if scheme == "file":
-        # normalize EVERY file: form to the plain OS path Hadoop would
-        # resolve it to, keeping the path VERBATIM ('#'/'?' are legal in
-        # filenames; no URL fragment/query truncation): file://host/path
-        # drops the (local-or-meaningless) authority, file:/abs stays
-        # absolute, and file:rel is relative to the working directory —
-        # the same base the os.* layer resolves 'rel' against (returning
-        # it verbatim instead would split pointer state into a local dir
-        # literally named 'file:rel' while Spark wrote data to ./rel)
-        if rest.startswith("//"):
-            after = rest[2:]
-            slash = after.find("/")
-            return after[slash:] if slash >= 0 else "/"
-        if not rest:
-            # bare 'file:' — returning '' would make downstream
-            # os.path.join silently resolve to the CURRENT WORKING
-            # DIRECTORY, a surprise location for durable index state
-            raise ValueError(
-                f"{what} is the bare URI 'file:' with no path — give an "
-                f"explicit location ('file:/abs/path' or a plain path)"
-            )
-        return rest
-    if not rest.startswith("/"):
-        # scheme-shaped head but the remainder is not a URI path — a
-        # relative local name like 'runs:2026/idx'
-        return uri
-    raise UnsupportedIndexFilesystem(
-        f"stored-IVF indexes require a POSIX filesystem (atomic rename + "
-        f"O_EXCL) but {what} is '{uri}' (scheme "
-        f"'{scheme}'). Object stores lack atomic rename and exclusive "
-        f"create, so the index's crash-atomicity and single-writer "
-        f"guarantees would not hold. Point the warehouse at a local/NFS "
-        f"path, or see COVERAGE.md 'Stored-IVF filesystem contract' for "
-        f"the object-store commit design."
-    )
-
-
-def _ivf_index_path(spark, index_name: str) -> str:
-    """Application-scoped on-disk location for a stored IVF index: the
-    heartbeat-swept per-application staging dir, so a stale index from a
-    dead session is reclaimed, never served. Refuses non-POSIX warehouse
-    schemes (see :func:`_require_posix_warehouse`)."""
-    import os
-
-    from ..sources.parquet import _touch_heartbeat
-
-    warehouse = _require_posix_warehouse(
-        spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    )
-    app_dir = os.path.join(
-        warehouse, "_staged_results", spark.sparkContext.applicationId
-    )
-    _touch_heartbeat(app_dir)
-    return os.path.join(app_dir, index_name)
-
-
-def ivf_index_built(spark, index_name: str) -> bool:
-    """True iff THIS session already built (or appended to) the named
-    stored index — the gate callers use to run build+append exactly once
-    per session before serving probes."""
-    import os
-
-    path = _ivf_index_path(spark, index_name)
-    return path in _BUILT_IVF_INDEXES and os.path.isdir(path)
-
-
-def _corpus_fingerprint(df: DataFrame, id_col: str) -> dict:
-    """Order-independent corpus identity: row count + bit_xor of 64-bit id
-    hashes. One column-pruned scan, one single-row collect. XOR composes
-    under append (fp(A ∪ B).id_xor == fp(A).id_xor ^ fp(B).id_xor), which
-    is what lets :func:`ivf_index_append` maintain the stored fingerprint
-    without rescanning the whole index."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.expr(f"bit_xor(xxhash64({id_col}))").alias("id_xor"),
-    ).collect()[0]
-    return {"rows": int(row["rows"]), "id_xor": int(row["id_xor"] or 0)}
-
-
-def _fp_core(fp: dict) -> dict:
-    """The corpus-identity projection of a stored fingerprint. The stored
-    JSON may carry bookkeeping beyond identity (``last_token`` for
-    at-least-once append replay detection); probe/verify must compare
-    identity only, or a token-carrying index would never match a freshly
-    computed corpus fingerprint."""
-    return {"rows": fp["rows"], "id_xor": fp["id_xor"]}
-
-
-def _read_fingerprint(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(f"{path}__meta", "fingerprint.json")) as fh:
-        return json.load(fh)
-
-
-def _read_fingerprint_or_none(path: str) -> dict | None:
-    """One behavior for every 'if the index has a fingerprint' site
-    (build's rebuild detection, append's replay fast path) — hand-rolled
-    variants of this drift."""
-    try:
-        return _read_fingerprint(path)
-    except FileNotFoundError:
-        return None
-
-
-def _centroid_token(spark, path: str) -> dict:
-    """Identity of the stored centroid SET (count + bit_xor of cent_id
-    hashes, one scan of the ≤``max_centroids``-row meta table). An append
-    stages its assignment against the centroids it read BEFORE taking the
-    lock; if a rebalance swapped the centroid set in between, publishing
-    that assignment would land rows in parent cells that no longer exist
-    in the refined set — unreachable by probes (which only visit cells the
-    live centroids name) yet counted by the fingerprint. Appends re-check
-    this token under the lock and raise instead."""
-    return _corpus_fingerprint(
-        spark.read.parquet(f"{path}__meta/centroids"), "cent_id"
-    )
-
-
-def _write_fingerprint(path: str, fp: dict) -> None:
-    """Atomic replace: write a temp file in the same dir and rename over
-    the old fingerprint, so a reader never sees a torn/partial JSON and a
-    crash mid-write leaves the previous fingerprint intact."""
-    import json
-    import os
-    import uuid
-
-    meta = f"{path}__meta"
-    os.makedirs(meta, exist_ok=True)
-    tmp = os.path.join(meta, f".fingerprint.{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(fp, fh)
-    os.replace(tmp, os.path.join(meta, "fingerprint.json"))
-
-
-def _write_append_manifest(
-    staging: str, batch_fp: dict, token, centroid_token: dict
-) -> None:
-    """Write the append's write-ahead manifest into the staging dir (see
-    :func:`ivf_index_append`). Temp-file + rename so a crash mid-write
-    leaves no torn manifest — repair treats a manifest-less staging dir
-    as a pre-publish crash and sweeps it."""
-    import glob
-    import json
-    import os
-
-    manifest = {
-        "kind": "append",
-        "files": sorted(
-            os.path.relpath(p, staging)
-            for p in glob.glob(os.path.join(staging, "cell_id=*", "*.parquet"))
-        ),
-        "batch_fp": dict(batch_fp),
-        "token": token,
-        "centroid_token": dict(centroid_token),
-    }
-    tmp = os.path.join(staging, ".manifest.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, os.path.join(staging, "manifest.json"))
-
-
-class ConcurrentIndexMutation(RuntimeError):
-    """A second writer tried to mutate a stored IVF index while another
-    mutation held the lock. The index maintains a SINGLE-WRITER contract:
-    appends compose the stored fingerprint read-modify-write, so two
-    interleaved appends could land both row batches while one batch's
-    contribution is lost from the fingerprint — every later fingerprint
-    check would then wrongly fail (or worse, pass against the wrong
-    corpus). Compaction and rebalance read index state and rewrite whole
-    cell directories, so overlapping them with an append would double or
-    drop the overlapped batch's rows. Raising beats silently corrupting
-    index data or metadata; the caller serializes mutations (retry after
-    the holder finishes)."""
-
-
-class IndexMaintenanceError(RuntimeError):
-    """Post-publish maintenance (auto-compaction) failed AFTER the append
-    durably landed its batch and advanced the fingerprint. The batch is
-    IN the index: retrying the append would duplicate it in a way the
-    XOR fingerprint cannot see (dup ids XOR-cancel), so this is a
-    distinct type whose message says what to retry — the compaction, via
-    :func:`ivf_index_compact` — and what not to."""
-
-
-def _read_lock_holder(lock_file: str) -> dict | None:
-    """Best-effort read of a lock file's holder payload. Tolerates a
-    missing file (lost the race the other way), an empty or torn file
-    (pre-payload crash, or a lock created by an older version / by
-    hand) — holder identity is diagnostic, never load-bearing."""
-    import json
-
-    try:
-        with open(lock_file) as fh:
-            payload = json.load(fh)
-    except (FileNotFoundError, ValueError):
-        return None
-    if isinstance(payload, dict) and {"host", "pid"} <= payload.keys():
-        return payload
-    return None
-
-
-class _index_write_lock:
-    """O_CREAT|O_EXCL lock file under ``<path>__meta`` guarding every
-    index MUTATION critical section: an append's publish+fingerprint
-    advance, and the full read-stage-swap span of compact and rebalance
-    (those two derive the rewritten cell contents from index reads, so
-    the reads must see the same files the swap later replaces — staging
-    outside the lock would let a concurrent append's files be merged
-    twice or deleted). A crash while holding the lock leaves the lock
-    file behind — the error message names it so an operator can remove
-    it after verifying the index (see :func:`ivf_index_verify`).
-
-    The lock file carries a small JSON payload (``host``, ``pid``,
-    ``acquired_utc``) so contention errors and :func:`ivf_index_verify`
-    can say WHO holds it — the post-mortem question after a crash is
-    "is that writer's process still alive on that host", and an empty
-    lock file cannot answer it. NOTE the O_EXCL guarantee is
-    per-filesystem: two drivers mounting DIFFERENT filesystems at the
-    same warehouse path (or an object-store mount faking O_EXCL) get
-    split-brain — the filesystem contract in COVERAGE.md covers this."""
-
-    def __init__(self, path: str):
-        import os
-
-        meta = f"{path}__meta"
-        os.makedirs(meta, exist_ok=True)
-        self._lock = os.path.join(meta, "append.lock")
-
-    def __enter__(self):
-        import json
-        import os
-        import socket
-        import time
-
-        try:
-            fd = os.open(self._lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            holder = _read_lock_holder(self._lock)
-            held_by = (
-                # .get defaults: _read_lock_holder accepts hand-written /
-                # older-version payloads that carry host+pid only
-                f" (held by pid {holder['pid']} on {holder['host']} "
-                f"since {holder.get('acquired_utc', 'unknown time')})"
-                if holder
-                else ""
-            )
-            raise ConcurrentIndexMutation(
-                f"another append holds {self._lock}{held_by}; retry after "
-                "it finishes (if its process died, run "
-                "ivf_index_repair(break_lock=True) to audit and restore "
-                "the index)"
-            ) from None
-        payload = {
-            "host": socket.gethostname(),
-            "pid": os.getpid(),
-            "acquired_utc": time.strftime(
-                "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-            ),
-        }
-        os.write(fd, json.dumps(payload).encode())
-        os.close(fd)
-        return self
-
-    def __exit__(self, *exc):
-        import os
-
-        try:
-            os.unlink(self._lock)
-        except FileNotFoundError:
-            pass
-        return False
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroid_mod: int = 50,
-    max_centroids: int = 256,
-    index_name: str = "ivf_index",
-) -> str:
-    """Build the stored IVF index: one assignment pass (broadcast
-    centroids, max-cosine cell) written as parquet ``partitionBy(cell_id)``
-    so probes prune to their cells. Alongside the cells, ``<path>__meta``
-    persists (a) the FROZEN centroid set — appends and probes read it back
-    instead of re-deriving from a possibly-drifted corpus — and (b) the
-    corpus fingerprint that :func:`ivf_index_probe` checks so a stored
-    index can never silently answer for a different corpus. Returns the
-    index path.
-
-    The whole (re)build runs under the single-writer lock: a rebuild
-    overwrites cells, centroids, stats, and fingerprint in sequence, so
-    racing it against an append/compact/rebalance would interleave their
-    renames with the overwrite — rows present but uncounted, or counted
-    but deleted. Like every other mutation, concurrency raises
-    :class:`ConcurrentIndexMutation` instead."""
-    import os
-
-    spark = corpus.sparkSession
-    _invalidate_fp_cache(spark)
-    path = _ivf_index_path(spark, index_name)
-    # captured BEFORE the overwrite below recreates the data dir: a
-    # REBUILD (live data exists) carries the append token forward; a
-    # fresh build — including one where the operator deleted the data
-    # dir to discard the token — must not (checking only the
-    # fingerprint file would mis-detect, since __meta is a SIBLING dir
-    # that deleting the data dir leaves behind)
-    is_rebuild = os.path.isdir(path)
-    cents = _ivf_centroids(corpus, vec_col, id_col, centroid_mod, max_centroids)
-    assigned = _ivf_assign(
-        spread_small_input(corpus).select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double_name(vec_col).alias("cv"),
-        ),
-        cents,
-        "neighbor_id",
-        "cv",
-        keep=1,
-    ).withColumnRenamed("cent_id", "cell_id")
-    with _index_write_lock(path):
-        assigned.write.mode("overwrite").partitionBy("cell_id").parquet(path)
-        cents.coalesce(1).write.mode("overwrite").parquet(
-            f"{path}__meta/centroids"
-        )
-        # per-cell row counts AT BUILD TIME — the drift baseline
-        # ivf_cell_skew_audit compares against (appends deliberately do not
-        # touch this: growth since build IS the signal)
-        (
-            spark.read.parquet(path)
-            .groupBy("cell_id")
-            .agg(F.count(F.lit(1)).alias("rows_at_build"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{path}__meta/cell_stats")
-        )
-        fp = _corpus_fingerprint(corpus, id_col)
-        # A REBUILD carries the previous append token forward: the
-        # documented repair flow rebuilds from the FULL current corpus,
-        # which already contains every tokened batch — dropping the token
-        # here would re-open the replay window the token exists to close
-        # (a replayed foreachBatch batch would re-append rows the rebuild
-        # already holds, and the XOR fingerprint cannot see duplicates:
-        # ids cancel back to an apparently-consistent value). Rebuilding
-        # from a corpus that does NOT include the last tokened batch is
-        # the one case this is wrong — there the operator deletes the
-        # index DATA dir first, which makes this a fresh build
-        # (is_rebuild was captured before the overwrite above).
-        prior = _read_fingerprint_or_none(path) if is_rebuild else None
-        if prior is not None and prior.get("last_token") is not None:
-            fp["last_token"] = prior["last_token"]
-        _write_fingerprint(path, fp)
-    _BUILT_IVF_INDEXES.add(path)
-    return path
-
-
-def ivf_index_append(
-    batch: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    index_name: str = "ivf_index",
-    compact_after_files: int | None = None,
-    idempotency_token: str | int | None = None,
-) -> str:
-    """Incrementally maintain a stored IVF index: assign ONLY the new
-    batch against the FROZEN stored centroid set and append the rows to
-    their owning ``cell_id`` partition directories — the 100 TB shape
-    where a daily embedding batch costs one batch-sized assignment pass,
-    not a full-corpus rebuild. The stored fingerprint is advanced by XOR
-    composition (count adds, id hashes XOR), so a subsequent
-    :func:`ivf_index_probe` against base ∪ batch verifies clean. Centroids
-    are deliberately NOT recomputed: cell membership of existing rows
-    never changes, which is exactly what makes the append O(|batch|).
-
-    Failure atomicity: the heavy Spark write lands in a STAGING dir next
-    to the index; a job failure there leaves the index and fingerprint
-    untouched (staging is swept). Only after the write commits are the
-    part files renamed into their cell partitions and the fingerprint
-    advanced — both under an O_EXCL lock (single-writer contract: a
-    concurrent append raises :class:`ConcurrentIndexMutation`, never
-    silently drops a batch from the fingerprint). Renames are same-
-    filesystem metadata ops, so the residual crash window is the file
-    moves themselves — :func:`ivf_index_verify` recomputes the
-    fingerprint from index CONTENTS to audit/repair after such a crash.
-
-    ``compact_after_files`` wires maintenance into the lifecycle: after
-    the batch publishes (same lock span, so no second writer can slip
-    between publish and compaction), any cell that has accreted more
-    than that many files is compacted in place (the
-    :func:`ivf_index_compact` machinery), so a daily append job never
-    lets probe cost degrade into file-open overhead. A compaction
-    failure at that point raises :class:`IndexMaintenanceError` — the
-    batch IS published and must not be re-appended.
-
-    ``idempotency_token`` makes the append exactly-once under
-    at-least-once delivery (Structured Streaming's foreachBatch replays
-    a micro-batch whose checkpoint didn't commit): the token is stored
-    atomically WITH the fingerprint advance, and an append whose token
-    equals the stored one is skipped as a duplicate delivery — the XOR
-    fingerprint alone cannot catch replays, because duplicate ids
-    XOR-cancel back to an apparently-consistent value. The token must
-    identify the LOGICAL batch globally, not just within one run:
-    namespace it by the identity scope of your batch ids (e.g.
-    ``f"{checkpoint_location}:batch-{batch_id}"`` — a bare batch_id
-    collides when a new checkpoint restarts ids at 0 against the same
-    index and would silently drop that first real batch). A rebuild via
-    :func:`build_ivf_index` from the full current corpus carries the
-    stored token forward, so post-repair replays stay no-ops.
-
-    ORDERING ASSUMPTION: only the MOST RECENT token is remembered
-    (``last_token``), so replay detection covers exactly one batch of
-    lookback — a re-delivery of an OLDER batch after a newer one landed
-    (b0 replayed after b1) is NOT detected and re-appends b0's rows.
-    That single-token contract is sufficient for the target producer,
-    Structured Streaming's foreachBatch, which replays only the latest
-    uncommitted batch and never re-delivers an already-committed one.
-    A hand-rolled caller with CONCURRENT or out-of-order producers must
-    serialize batches itself (or keep its own applied-token ledger) —
-    the token is a replay guard, not a general dedup log
-    (tests/test_similarity.py pins this limitation explicitly)."""
-    import glob
-    import os
-    import shutil
-    import uuid
-
-    spark = batch.sparkSession
-    # the caller's corpus is moving (that's why it's appending): drop this
-    # session's memoized corpus fingerprints so a later cached probe can't
-    # compare against a pre-append fingerprint (ADVICE r8: the plan hash
-    # can't see file-level growth behind the same corpus plan)
-    _invalidate_fp_cache(spark)
-    path = _ivf_index_path(spark, index_name)
-    if idempotency_token is not None:
-        # unlocked FAST PATH for the feature's target case: a replayed
-        # delivery should not pay the batch-sized assignment + staged
-        # parquet write just to be discarded at the locked check below
-        # (which stays — this read is advisory, the locked one decides).
-        # The data-dir check keeps the skip honest: a stale fingerprint
-        # surviving next to a deleted index must not declare the replay
-        # served
-        fp = _read_fingerprint_or_none(path)
-        if (
-            fp is not None
-            and fp.get("last_token") == idempotency_token
-            and os.path.isdir(path)
-        ):
-            _BUILT_IVF_INDEXES.add(path)
-            return path
-    cents = spark.read.parquet(f"{path}__meta/centroids")
-    cents_seen = _centroid_token(spark, path)
-    assigned = _ivf_assign(
-        spread_small_input(batch).select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double_name(vec_col).alias("cv"),
-        ),
-        cents,
-        "neighbor_id",
-        "cv",
-        keep=1,
-    ).withColumnRenamed("cent_id", "cell_id")
-    staging = f"{path}__staging_{uuid.uuid4().hex}"
-    try:
-        assigned.write.mode("overwrite").partitionBy("cell_id").parquet(staging)
-        add = _corpus_fingerprint(batch, id_col)
-        # WRITE-AHEAD MANIFEST: everything :func:`ivf_index_repair` needs
-        # to roll a crashed publish forward — the staged file list, the
-        # batch's fingerprint delta, the token, and the centroid set the
-        # assignment was computed against (a repair must discard the
-        # staging if a rebalance swapped centroids before the crash).
-        # Written BEFORE the lock/rename span so no crash window exists
-        # between "files started moving" and "repair knows what moved"
-        _write_append_manifest(staging, add, idempotency_token, cents_seen)
-        with _index_write_lock(path):
-            # the staged assignment is only valid against the centroid
-            # set it was computed from — a rebalance that swapped the
-            # centroids while we staged would make these cell ids stale
-            if _centroid_token(spark, path) != cents_seen:
-                raise ConcurrentIndexMutation(
-                    f"centroid set of '{index_name}' changed while this "
-                    "append was staging (a rebalance ran concurrently); "
-                    "re-run the append against the refined centroids"
-                )
-            old = _read_fingerprint(path)
-            if (
-                idempotency_token is not None
-                and old.get("last_token") == idempotency_token
-            ):
-                # duplicate delivery of an already-applied batch: skip
-                # (the finally sweeps the staged copy); the index already
-                # holds these rows and the fingerprint already counts them
-                _BUILT_IVF_INDEXES.add(path)
-                return path
-            for cell_dir in glob.glob(os.path.join(staging, "cell_id=*")):
-                dst_dir = os.path.join(path, os.path.basename(cell_dir))
-                os.makedirs(dst_dir, exist_ok=True)
-                for part in glob.glob(os.path.join(cell_dir, "*.parquet")):
-                    os.rename(
-                        part, os.path.join(dst_dir, os.path.basename(part))
-                    )
-            fp = {
-                "rows": old["rows"] + add["rows"],
-                "id_xor": old["id_xor"] ^ add["id_xor"],
-            }
-            # the token rides the SAME atomic write as the identity — a
-            # separate file would reopen the replay window between them
-            if idempotency_token is not None:
-                fp["last_token"] = idempotency_token
-            elif "last_token" in old:
-                fp["last_token"] = old["last_token"]
-            _write_fingerprint(path, fp)
-            if compact_after_files is not None:
-                try:
-                    _compact_cells_locked(
-                        spark, path, max_files_per_cell=compact_after_files
-                    )
-                except Exception as exc:
-                    # Exception, not BaseException: a KeyboardInterrupt /
-                    # SystemExit must propagate as itself, not be
-                    # laundered into a catchable application error
-                    raise IndexMaintenanceError(
-                        f"auto-compaction of '{index_name}' failed AFTER "
-                        "the batch was durably published and the "
-                        "fingerprint advanced — do NOT retry the append "
-                        "(it would silently duplicate the batch); retry "
-                        "the compaction via ivf_index_compact"
-                    ) from exc
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    _BUILT_IVF_INDEXES.add(path)
-    return path
-
-
-def ivf_index_verify(spark, index_name: str = "ivf_index") -> dict:
-    """Recompute the corpus fingerprint from the INDEX CONTENTS (one
-    id-column-pruned scan) and compare with the stored fingerprint — the
-    audit/repair tool for a crash inside a mutation's publish window.
-    Also checks REACHABILITY: every on-disk cell directory must be named
-    by a live centroid, because the count+XOR fingerprint is
-    layout-insensitive — a crash between a rebalance's data swap and its
-    centroid swap leaves every row present (fingerprint clean) yet the
-    split cells' rows in directories no probe is ever routed to. Also
-    reports STALE ASIDES — the hidden ``.…old`` copies rebalance/compact
-    rename originals to during a swap: a crash can leave them behind,
-    where they hold duplicate (invisible) data forever and would
-    otherwise never surface in any audit. Returns ``{"stored", "actual",
-    "orphan_cells", "stale_asides", "lock_holder", "consistent"}``;
-    callers finding ``consistent=False`` run :func:`ivf_index_repair`
-    (automated restore-or-discard) or rebuild. ``lock_holder`` is the
-    writer-lock payload ({host, pid, acquired_utc}) when a lock file
-    exists, else None — diagnostic only (a LIVE writer's lock is normal,
-    so it never flips ``consistent``); after a crash it answers the
-    post-mortem question "whose lock is this, and is that process dead",
-    which gates ``ivf_index_repair(break_lock=True)``."""
-    import glob as _glob
-    import os
-
-    path = _ivf_index_path(spark, index_name)
-    actual = _corpus_fingerprint(spark.read.parquet(path), "neighbor_id")
-    stored = _read_fingerprint(path)
-    stale = sorted(
-        os.path.relpath(p, path)
-        for p in _glob.glob(os.path.join(path, ".cell_id=*.old"))
-        + _glob.glob(os.path.join(path, "cell_id=*", ".*.old"))
-    )
-    live = {
-        int(r["cent_id"])
-        for r in spark.read.parquet(f"{path}__meta/centroids")
-        .select("cent_id")
-        .collect()  # bounded: ≤ max_centroids rows
-    }
-    on_disk = {
-        int(d.split("=", 1)[1])
-        for d in os.listdir(path)
-        if d.startswith("cell_id=")
-    }
-    # on_disk ⊆ live is the invariant (a live centroid MAY own zero rows
-    # after duplicate-vector tie-breaks, so live ⊆ on_disk is not)
-    orphans = sorted(on_disk - live)
-    return {
-        "stored": stored,
-        "actual": actual,
-        "orphan_cells": orphans,
-        "stale_asides": stale,
-        "lock_holder": _read_lock_holder(
-            os.path.join(f"{path}__meta", "append.lock")
-        ),
-        "consistent": (
-            _fp_core(stored) == _fp_core(actual) and not orphans and not stale
-        ),
-    }
-
-
-def ivf_index_repair(
-    spark, index_name: str = "ivf_index", break_lock: bool = False
-) -> dict:
-    """Automated crash recovery for a stored IVF index — consumes the
-    damage classes :func:`ivf_index_verify` reports (orphan cells, stale
-    asides, fingerprint drift) and restores consistency under the writer
-    lock, closing the loop that used to end at a manual runbook. Safe to
-    run on a healthy index (no-op). Every decision is derived from
-    durable on-disk state, never from guessing which files "look" staged:
-
-    - **Crashed append** (staging dir with a write-ahead manifest): rolled
-      FORWARD — the manifest lists exactly which part files belong to the
-      batch, so the remaining moves complete, and the fingerprint advances
-      by the manifest's batch delta (validated against a content
-      recompute). A staging whose token already equals the stored token
-      (crash after the fingerprint write) or whose centroid set was
-      swapped while it staged is discarded instead; a manifest-LESS
-      staging dir is a pre-publish crash — swept, the batch was never
-      applied and re-delivery (the token's job) supplies it again.
-    - **Crashed rebalance, not yet published** (parent asides whose cell
-      id is still in the LIVE centroid set): rolled BACK — parents are
-      restored from their asides (deleting any same-crash child that
-      reused a split parent's id) and the orphaned child cells are
-      removed after a fingerprint check proves the live-centroid cells
-      alone already hold every fingerprinted row.
-    - **Crashed rebalance, published** (parent asides whose id is NOT in
-      the live centroid set): the children are canonical — the duplicate
-      parent asides are discarded; a cell_stats baseline still naming
-      dead cells is rolled forward from the crash's staged copy when one
-      survives, else recomputed from current contents (baseline resets
-      are reported in ``actions``).
-    - **Crashed compaction** (in-cell ``.part….old`` asides): the asides
-      are the pre-compaction originals. Live files whose rows are ALL
-      contained in the asides are the landed half of the crashed rewrite
-      and are deleted; disjoint live files are un-hidden originals and
-      kept. Either way the asides are restored — the cell is
-      byte-equivalent to before the compaction.
-    - **Meta leftovers**: a missing live ``centroids``/``cell_stats`` dir
-      is restored from its ``.old`` copy; completed-swap ``.old`` and
-      staged ``.new`` residues are swept.
-
-    ``break_lock=True`` removes a leftover writer lock first — pass it
-    ONLY after confirming the crashed writer's process is dead (a live
-    writer's lock must win; that is the single-writer contract).
-    Returns ``{"actions": [...], **ivf_index_verify(...)}`` and raises
-    :class:`IndexMaintenanceError` if consistency could not be restored
-    (the remaining remedy is :func:`build_ivf_index` from the full
-    current corpus, which carries the stored token forward)."""
-    import glob
-    import json
-    import os
-    import shutil
-    import uuid
-
-    path = _ivf_index_path(spark, index_name)
-    meta = f"{path}__meta"
-    actions: list[str] = []
-    lock_file = os.path.join(meta, "append.lock")
-    if break_lock and os.path.exists(lock_file):
-        os.unlink(lock_file)
-        actions.append("removed leftover writer lock (caller confirmed dead)")
-    with _index_write_lock(path):
-        # any repair invalidates this session's memoized fingerprints:
-        # contents and/or the stored fingerprint may change below
-        _invalidate_fp_cache(spark)
-
-        # -- 1. live meta dirs: restore from .old if a swap died midway
-        for name in ("centroids", "cell_stats"):
-            live = os.path.join(meta, name)
-            old = f"{live}.old"
-            if not os.path.isdir(live) and os.path.isdir(old):
-                os.rename(old, live)
-                actions.append(f"restored __meta/{name} from its .old copy")
-        if not os.path.isdir(os.path.join(meta, "centroids")):
-            raise IndexMaintenanceError(
-                f"index '{index_name}' has no centroid set and no .old "
-                "copy to restore — rebuild via build_ivf_index"
-            )
-
-        live_ids = {
-            int(r["cent_id"])
-            for r in spark.read.parquet(f"{path}__meta/centroids")
-            .select("cent_id")
-            .collect()  # bounded: ≤ max_centroids rows
-        }
-
-        # -- 2. rebalance parent asides: roll back or discard by whether
-        #       the centroid swap (the publish point) landed
-        published_rebalance = False
-        for aside in sorted(glob.glob(os.path.join(path, ".cell_id=*.old"))):
-            cell = int(os.path.basename(aside)[len(".cell_id=") : -len(".old")])
-            target = os.path.join(path, f"cell_id={cell}")
-            if cell in live_ids:
-                # centroids still name the parent: the rebalance never
-                # became probe-visible — roll it back. A live dir with
-                # this id can only be a same-crash child that reused a
-                # split parent's id (the parent itself was renamed aside
-                # first); its rows are duplicates of the parents' union
-                if os.path.isdir(target):
-                    shutil.rmtree(target)
-                os.rename(aside, target)
-                actions.append(f"restored split parent cell {cell} from aside")
-            else:
-                published_rebalance = True
-                shutil.rmtree(aside)
-                actions.append(
-                    f"discarded duplicate parent aside of published "
-                    f"rebalance (cell {cell})"
-                )
-
-        # -- 3. orphan cells (dirs no live centroid routes to): delete
-        #       only if the live-centroid cells alone account for every
-        #       fingerprinted row — otherwise deleting would lose data
-        on_disk = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(path)
-            if d.startswith("cell_id=")
-        }
-        orphans = sorted(on_disk - live_ids)
-        if orphans:
-            stored = _read_fingerprint(path)
-            pruned_fp = _corpus_fingerprint(
-                spark.read.parquet(path).where(
-                    F.col("cell_id").cast("long").isin(sorted(live_ids))
-                ),
-                "neighbor_id",
-            )
-            if pruned_fp != _fp_core(stored):
-                raise IndexMaintenanceError(
-                    f"orphan cells {orphans} hold rows the fingerprint "
-                    "counts (live cells alone do not reproduce it) — the "
-                    "centroid swap is missing; rebuild via build_ivf_index"
-                )
-            for cell in orphans:
-                shutil.rmtree(os.path.join(path, f"cell_id={cell}"))
-            actions.append(f"removed duplicate orphan cells {orphans}")
-
-        # -- 4. residue of a crashed REPAIR: step 5 stages asides into a
-        #        visible sibling temp dir to read them; a repair killed
-        #        mid-step would strand the ONLY copy of those rows there.
-        #        Each temp dir carries a marker naming its cell, so the
-        #        files are moved back as asides (pre-repair state) first
-        for tmp in sorted(glob.glob(f"{path}__repair_*")):
-            marker = os.path.join(tmp, ".cell_dir")
-            if not os.path.isfile(marker):
-                raise IndexMaintenanceError(
-                    f"unmarked repair residue {tmp} — inspect manually "
-                    "before re-running repair"
-                )
-            with open(marker) as fh:
-                cell_dir = os.path.join(path, fh.read().strip())
-            os.makedirs(cell_dir, exist_ok=True)
-            moved_back = 0
-            for p in glob.glob(os.path.join(tmp, "*.parquet")):
-                os.rename(
-                    p,
-                    os.path.join(cell_dir, f".{os.path.basename(p)}.old"),
-                )
-                moved_back += 1
-            shutil.rmtree(tmp)
-            actions.append(
-                f"recovered {moved_back} aside files from a crashed "
-                f"earlier repair into {os.path.basename(cell_dir)}"
-            )
-
-        # -- 5. compaction asides: restore originals; drop live files the
-        #        asides already contain (the landed half of the rewrite)
-        for cell_dir in sorted(glob.glob(os.path.join(path, "cell_id=*"))):
-            asides = sorted(glob.glob(os.path.join(cell_dir, ".*.old")))
-            if not asides:
-                continue
-            # Spark's hidden-file filter skips dot-files even when named
-            # explicitly, so stage the asides into a visible temp dir
-            # (same-fs renames) to read them. The marker file makes this
-            # span itself crash-recoverable (step 4); on any failure the
-            # files move back to their aside names — never deleted
-            tmp = f"{path}__repair_{uuid.uuid4().hex}"
-            os.makedirs(tmp)
-            with open(os.path.join(tmp, ".cell_dir"), "w") as fh:
-                fh.write(os.path.basename(cell_dir))
-            restore: list[tuple[str, str]] = []
-            try:
-                for a in asides:
-                    orig = os.path.basename(a)[1 : -len(".old")]
-                    os.rename(a, os.path.join(tmp, orig))
-                    restore.append(
-                        (os.path.join(tmp, orig), os.path.join(cell_dir, orig))
-                    )
-                live_parts = glob.glob(os.path.join(cell_dir, "*.parquet"))
-                extra = 0
-                if live_parts:
-                    extra = (
-                        spark.read.parquet(cell_dir)
-                        .select("neighbor_id")
-                        .join(
-                            spark.read.parquet(tmp).select("neighbor_id"),
-                            "neighbor_id",
-                            "left_anti",
-                        )
-                        .count()
-                    )
-                if live_parts and extra == 0:
-                    # every live row already exists in the asides: the
-                    # live files are the crashed rewrite's landed output
-                    for p in live_parts:
-                        os.unlink(p)
-                    actions.append(
-                        f"dropped {len(live_parts)} landed rewrite files in "
-                        f"{os.path.basename(cell_dir)}"
-                    )
-                for src, dst in restore:
-                    os.rename(src, dst)
-            except BaseException:
-                # undo: staged asides back to their hidden names — the
-                # temp dir must NEVER be deleted while it holds the only
-                # copy of the cell's rows
-                for src, _ in restore:
-                    if os.path.exists(src):
-                        os.rename(
-                            src,
-                            os.path.join(
-                                cell_dir, f".{os.path.basename(src)}.old"
-                            ),
-                        )
-                raise
-            shutil.rmtree(tmp)
-            actions.append(
-                f"restored {len(restore)} pre-compaction originals in "
-                f"{os.path.basename(cell_dir)}"
-            )
-
-        # -- 6. crashed appends: roll forward by manifest, sweep the rest.
-        #       Runs AFTER the cell-level repairs above so the content
-        #       validation below sees healthy cells (a coexisting
-        #       compaction aside would otherwise make every roll-forward
-        #       look fingerprint-inconsistent and force a rebuild)
-        for staging in sorted(glob.glob(f"{path}__staging_*")):
-            mpath = os.path.join(staging, "manifest.json")
-            if not os.path.isfile(mpath):
-                # pre-manifest crash (or a rebalance/compact staging):
-                # nothing was published from it, and append batches are
-                # re-delivered by the at-least-once producer
-                shutil.rmtree(staging)
-                actions.append(
-                    f"swept manifest-less staging {os.path.basename(staging)}"
-                )
-                continue
-            with open(mpath) as fh:
-                manifest = json.load(fh)
-            stored = _read_fingerprint(path)
-            tok = manifest.get("token")
-            if tok is not None and stored.get("last_token") == tok:
-                # crash AFTER the fingerprint advance: batch fully applied
-                shutil.rmtree(staging)
-                actions.append(
-                    f"discarded staging of already-applied batch {tok!r}"
-                )
-                continue
-            if _centroid_token(spark, path) != manifest["centroid_token"]:
-                shutil.rmtree(staging)
-                actions.append(
-                    "discarded staging assigned against a superseded "
-                    "centroid set — re-deliver the batch"
-                )
-                continue
-            for rel in manifest["files"]:
-                src = os.path.join(staging, rel)
-                dst = os.path.join(path, rel)
-                if os.path.exists(src):
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    os.rename(src, dst)
-                elif not os.path.exists(dst):
-                    raise IndexMaintenanceError(
-                        f"append manifest names {rel} but it exists in "
-                        "neither staging nor the index — cannot roll "
-                        "forward; rebuild via build_ivf_index"
-                    )
-            expected = {
-                "rows": stored["rows"] + manifest["batch_fp"]["rows"],
-                "id_xor": stored["id_xor"] ^ manifest["batch_fp"]["id_xor"],
-            }
-            actual = _corpus_fingerprint(spark.read.parquet(path), "neighbor_id")
-            if actual == _fp_core(stored):
-                # a token-LESS append that crashed after its fingerprint
-                # write: contents already match the stored fingerprint, so
-                # the batch is fully applied — advancing again would
-                # double-count it
-                shutil.rmtree(staging)
-                actions.append(
-                    "discarded staging of already-applied token-less batch"
-                )
-                continue
-            if actual != expected:
-                raise IndexMaintenanceError(
-                    "rolled-forward contents match neither the pre- nor "
-                    f"post-append fingerprint (actual {actual}, expected "
-                    f"{expected}) — rebuild via build_ivf_index"
-                )
-            if tok is not None:
-                expected["last_token"] = tok
-            elif "last_token" in stored:
-                expected["last_token"] = stored["last_token"]
-            _write_fingerprint(path, expected)
-            shutil.rmtree(staging)
-            actions.append(
-                f"rolled crashed append forward ({manifest['batch_fp']['rows']} "
-                "rows; fingerprint advanced)"
-            )
-
-
-        # -- 7. cell_stats naming dead cells (stats swap died after the
-        #       centroid swap): roll the crash's staged copy forward when
-        #       exactly one survives and matches the live centroids, else
-        #       recompute (which RESETS the drift baseline — reported)
-        stats_path = os.path.join(meta, "cell_stats")
-        stats_ids = {
-            int(r["cell_id"])
-            for r in spark.read.parquet(stats_path)
-            .select(F.col("cell_id").cast("long").alias("cell_id"))
-            .collect()  # bounded: ≤ max_centroids rows
-        }
-        if published_rebalance or not stats_ids <= live_ids:
-            staged = glob.glob(os.path.join(meta, ".cell_stats.*.new"))
-            rolled = False
-            if len(staged) == 1:
-                staged_ids = {
-                    int(r["cell_id"])
-                    for r in spark.read.parquet(staged[0])
-                    .select(F.col("cell_id").cast("long").alias("cell_id"))
-                    .collect()  # bounded: ≤ max_centroids rows
-                }
-                if staged_ids <= live_ids:
-                    bak = f"{stats_path}.old"
-                    shutil.rmtree(bak, ignore_errors=True)
-                    os.rename(stats_path, bak)
-                    os.rename(staged[0], stats_path)
-                    shutil.rmtree(bak)
-                    actions.append("rolled staged cell_stats forward")
-                    rolled = True
-            if not rolled and not stats_ids <= live_ids:
-                new_dir = os.path.join(meta, f".cell_stats.{uuid.uuid4().hex}.new")
-                (
-                    spark.read.parquet(path)
-                    .groupBy(F.col("cell_id").cast("long").alias("cell_id"))
-                    .agg(F.count(F.lit(1)).alias("rows_at_build"))
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(new_dir)
-                )
-                bak = f"{stats_path}.old"
-                shutil.rmtree(bak, ignore_errors=True)
-                os.rename(stats_path, bak)
-                os.rename(new_dir, stats_path)
-                shutil.rmtree(bak)
-                actions.append(
-                    "recomputed cell_stats from current contents (drift "
-                    "baseline RESET to now)"
-                )
-
-        # -- 8. sweep completed-swap residues
-        for leftover in glob.glob(os.path.join(meta, ".*.new")):
-            shutil.rmtree(leftover)
-            actions.append(f"swept staged meta dir {os.path.basename(leftover)}")
-        for name in ("centroids", "cell_stats"):
-            old = os.path.join(meta, f"{name}.old")
-            if os.path.isdir(old) and os.path.isdir(os.path.join(meta, name)):
-                shutil.rmtree(old)
-                actions.append(f"swept superseded __meta/{name}.old")
-
-    report = ivf_index_verify(spark, index_name)
-    if not report["consistent"]:
-        raise IndexMaintenanceError(
-            f"repair of '{index_name}' could not restore consistency "
-            f"(verify: {report}) — rebuild via build_ivf_index from the "
-            "full current corpus (the stored token is carried forward)"
-        )
-    return {"actions": actions, **report}
-
-
-def ivf_cell_skew_audit(spark, index_name: str = "ivf_index") -> DataFrame:
-    """Per-cell drift report for a stored IVF index: current row count vs
-    the count at build/rebalance time. Appends against FROZEN centroids
-    never move existing rows, so a drifted batch distribution shows up as
-    unbounded growth of a few hot cells — probe cost per cell rises and
-    recall falls, and WITHOUT this audit nothing measures it. One
-    column-pruned scan of the index (cell_id only — at 100 TB this reads
-    parquet footers + one tiny shuffle of ≤``max_centroids`` groups)
-    joined to the ≤256-row stored baseline.
-
-    Columns: ``cell_id, rows_at_build, rows_now, added, growth`` (growth
-    NULL for a cell born after build). Feed the hot cells to
-    :func:`ivf_index_rebalance`."""
-    path = _ivf_index_path(spark, index_name)
-    # cell ids are LONG: after a rebalance the refined centroid ids are
-    # arbitrary member vec_ids, so an int cast would wrap above 2^31
-    now = (
-        spark.read.parquet(path)
-        .groupBy(F.col("cell_id").cast("long").alias("cell_id"))
-        .agg(F.count(F.lit(1)).alias("rows_now"))
-    )
-    base = spark.read.parquet(f"{path}__meta/cell_stats").select(
-        F.col("cell_id").cast("long").alias("cell_id"),
-        F.col("rows_at_build").cast("long").alias("rows_at_build"),
-    )
-    # full_outer keeps cells that exist on only one side (born post-build /
-    # emptied); no broadcast hint — unsupported for full outer, and both
-    # sides are ≤ max_centroids rows anyway
-    return (
-        now.join(base, "cell_id", "full_outer")
-        .select(
-            "cell_id",
-            F.coalesce("rows_at_build", F.lit(0)).alias("rows_at_build"),
-            F.coalesce("rows_now", F.lit(0)).alias("rows_now"),
-            (
-                F.coalesce("rows_now", F.lit(0))
-                - F.coalesce("rows_at_build", F.lit(0))
-            ).alias("added"),
-            F.round(
-                F.coalesce(F.col("rows_now"), F.lit(0))
-                / F.when(F.col("rows_at_build") > 0, F.col("rows_at_build")),
-                4,
-            ).alias("growth"),
-        )
-    )
-
-
-def ivf_index_rebalance(
-    spark,
-    index_name: str = "ivf_index",
-    cells: list[int] | None = None,
-    factor: int = 2,
-    growth_threshold: float = 2.0,
-) -> list[int]:
-    """Re-split oversized cells of a stored IVF index while leaving cold
-    cells untouched — the drift-repair half of the serving lifecycle
-    (build → append → audit → REBALANCE). Each listed cell is split into
-    ``factor`` sub-cells: the sub-centroids are the cell's ``factor``
-    smallest-id member VECTORS (deterministic, so the whole operation is
-    DuckDB-replayable), every row of the cell is reassigned to its
-    max-cosine sub-centroid, and the refined centroid set replaces the
-    parent — future probes rank sub-cells individually, restoring
-    per-cell probe cost and recall without touching any other partition.
-
-    ``cells=None`` selects cells whose current rows exceed
-    ``growth_threshold ×`` their build-time count (the audit's growth
-    signal); a cell born AFTER build (``rows_at_build`` 0, growth NULL —
-    infinite) qualifies whenever it holds rows. Cost is O(rows in the
-    chosen cells) — the scan is partition-pruned to exactly those
-    directories; the corpus fingerprint is unchanged (same rows, new
-    layout). The ENTIRE read-stage-swap span runs under the single-writer
-    lock (the staged reassignment must see the same cell files the swap
-    later deletes — staging outside the lock would silently drop a
-    concurrently-appended batch when the parent dir is removed); the
-    publish step is file renames, with :func:`ivf_index_verify` as the
-    post-crash audit. Returns the list of parent cell ids actually
-    split."""
-    import os
-
-    from pyspark.sql import Window
-
-    path = _ivf_index_path(spark, index_name)
-    meta = f"{path}__meta"
-    if cells is None:
-        audit = ivf_cell_skew_audit(spark, index_name)
-        cells = [
-            int(r["cell_id"])
-            for r in audit.where(
-                (F.col("growth") >= growth_threshold)
-                # growth is NULL for a cell born after build: its growth
-                # is infinite, so any populated newborn cell qualifies —
-                # a bare `NULL >= threshold` would silently drop exactly
-                # the fastest-growing cells from auto-selection
-                | (F.col("growth").isNull() & (F.col("rows_now") > 0))
-            ).collect()  # bounded: ≤ max_centroids rows
-        ]
-    cells = sorted(int(c) for c in cells)
-    if not cells:
-        return []
-
-    with _index_write_lock(path):
-        all_cent_ids = {
-            int(r["cent_id"])
-            for r in spark.read.parquet(os.path.join(meta, "centroids"))
-            .select("cent_id")
-            .collect()  # bounded: ≤ max_centroids rows
-        }
-        # Sub-centroid ids must not collide with a SURVIVING centroid id
-        # (a member row whose vec_id is also a kept centroid — possible
-        # when duplicate-direction vectors tie-broke into a sibling cell
-        # at build): a duplicate cent_id in the refined set would merge
-        # two cells' files and double-score that centroid. Such rows stay
-        # members but are excluded as sub-centroid CANDIDATES; a cell
-        # left with no candidates is dropped from the split set (deleting
-        # its dir with no sub-cells to land in would lose its rows).
-        # Dropping a cell returns its centroid to the kept set, so
-        # iterate to a fixpoint — ≤ |cells| tiny bounded passes, one in
-        # practice.
-        while True:
-            kept_ids = sorted(all_cent_ids - set(cells))
-            # partition-pruned scan of ONLY the cells being split
-            sub_rows = (
-                spark.read.parquet(path)
-                .where(F.col("cell_id").isin(cells))
-                .select(
-                    F.col("cell_id").cast("long").alias("parent"),
-                    "neighbor_id",
-                    "cv",
-                )
-            )
-            w = Window.partitionBy("parent").orderBy("neighbor_id")
-            subcents = (
-                sub_rows.where(~F.col("neighbor_id").isin(kept_ids))
-                .withColumn("srk", F.row_number().over(w))
-                .where(F.col("srk") <= factor)
-                .select(
-                    "parent",
-                    F.col("neighbor_id").alias("sub_id"),
-                    F.col("cv").alias("sub_v"),
-                )
-            )
-            splittable = sorted(
-                int(r["parent"])
-                for r in subcents.select("parent").distinct().collect()
-            )  # bounded: ≤ |cells| rows
-            if splittable == cells:
-                break
-            cells = splittable
-            if not cells:
-                return []
-        return _ivf_rebalance_locked(
-            spark, path, meta, cells, sub_rows, subcents
-        )
-
-
-def _ivf_rebalance_locked(
-    spark, path, meta, cells, sub_rows, subcents
-) -> list[int]:
-    """The stage-and-swap half of :func:`ivf_index_rebalance`; the caller
-    holds the index write lock for the whole span."""
-    import glob
-    import os
-    import shutil
-    import uuid
-
-    from pyspark.sql import Window
-
-    scored = sub_rows.join(F.broadcast(subcents), "parent").select(
-        "parent",
-        "neighbor_id",
-        "cv",
-        "sub_id",
-        (
-            _dot(F.col("cv"), F.col("sub_v"))
-            / (
-                F.sqrt(_dot(F.col("cv"), F.col("cv")))
-                * F.sqrt(_dot(F.col("sub_v"), F.col("sub_v")))
-            )
-        ).alias("sub_cos"),
-    )
-    wr = Window.partitionBy("parent", "neighbor_id").orderBy(
-        F.col("sub_cos").desc(), F.col("sub_id")
-    )
-    assigned = (
-        scored.withColumn("rrk", F.row_number().over(wr))
-        .where(F.col("rrk") == 1)
-        .select(F.col("sub_id").alias("cell_id"), "neighbor_id", "cv")
-    )
-
-    staging = f"{path}__staging_{uuid.uuid4().hex}"
-    cents_new_dir = os.path.join(meta, f".centroids.{uuid.uuid4().hex}.new")
-    stats_new_dir = os.path.join(meta, f".cell_stats.{uuid.uuid4().hex}.new")
-    try:
-        assigned.write.mode("overwrite").partitionBy("cell_id").parquet(staging)
-
-        cents = spark.read.parquet(os.path.join(meta, "centroids"))
-        refined = cents.where(~F.col("cent_id").isin(cells)).unionByName(
-            subcents.select(
-                F.col("sub_id").alias("cent_id"), F.col("sub_v").alias("cent_v")
-            )
-        )
-        refined.coalesce(1).write.mode("overwrite").parquet(cents_new_dir)
-
-        stats = spark.read.parquet(os.path.join(meta, "cell_stats"))
-        child_stats = (
-            spark.read.parquet(staging)
-            .groupBy(F.col("cell_id").cast("long").alias("cell_id"))
-            .agg(F.count(F.lit(1)).alias("rows_at_build"))
-        )
-        new_stats = (
-            stats.where(~F.col("cell_id").cast("long").isin(cells))
-            .select(
-                F.col("cell_id").cast("long").alias("cell_id"),
-                F.col("rows_at_build").cast("long").alias("rows_at_build"),
-            )
-            .unionByName(child_stats)
-        )
-        new_stats.coalesce(1).write.mode("overwrite").parquet(stats_new_dir)
-
-        # Publish (caller holds the index write lock for this whole
-        # span). The parents are RENAMED ASIDE — to a dot-prefixed name
-        # Spark's hidden-file filter ignores — never deleted, until every
-        # staged child and both meta swaps have landed: an exception
-        # anywhere undoes the children and restores the parents, so the
-        # original rows keep a live copy throughout (the staged children
-        # hold the SAME rows re-bucketed, so deleting them on undo loses
-        # nothing). The previous shape deleted parents first; a failure
-        # in the child renames then hit the staging sweep in the finally
-        # and destroyed the only remaining copy of the split cells' rows.
-        moved_aside: list[str] = []  # original parent dir paths
-        created_children: list[str] = []
-        swapped: list[tuple[str, str]] = []  # (live meta dir, its .old copy)
-        try:
-            for cell in cells:
-                src = os.path.join(path, f"cell_id={cell}")
-                aside = os.path.join(path, f".cell_id={cell}.old")
-                # a stale aside is crash residue that can hold the ONLY
-                # copy of this cell's rows (death right after the
-                # rename-aside, before any staged child landed) — refuse
-                # loudly rather than delete it or fail with a bare
-                # ENOTEMPTY; verify reports these as stale_asides
-                if os.path.exists(aside):
-                    raise RuntimeError(
-                        f"stale aside {aside} exists — crash residue "
-                        "that may hold the only copy of the cell's "
-                        "rows; run ivf_index_repair before rebalancing"
-                    )
-                os.rename(src, aside)
-                moved_aside.append(src)
-            for cell_dir in glob.glob(os.path.join(staging, "cell_id=*")):
-                dst_dir = os.path.join(path, os.path.basename(cell_dir))
-                # unconditional, TRACKED create: a pre-existing dir here
-                # can only be orphan crash residue (verify flags those);
-                # renaming staged parts into an untracked live dir would
-                # break the undo's byte-identical-restore guarantee, so
-                # fail BEFORE anything moves and point at the repair
-                try:
-                    os.makedirs(dst_dir)
-                except FileExistsError:
-                    raise RuntimeError(
-                        f"rebalance target {dst_dir} already exists — "
-                        "orphan residue from a crashed mutation; run "
-                        "ivf_index_verify and repair before rebalancing"
-                    ) from None
-                created_children.append(dst_dir)
-                for part in glob.glob(os.path.join(cell_dir, "*.parquet")):
-                    os.rename(
-                        part, os.path.join(dst_dir, os.path.basename(part))
-                    )
-            for name, new_dir in (
-                ("centroids", cents_new_dir),
-                ("cell_stats", stats_new_dir),
-            ):
-                live = os.path.join(meta, name)
-                old = f"{live}.old"
-                shutil.rmtree(old, ignore_errors=True)
-                os.rename(live, old)
-                try:
-                    os.rename(new_dir, live)
-                except BaseException:
-                    # restore the previous copy rather than leave NO
-                    # live dir (the finally below would then delete the
-                    # only new copy too); a process death between the
-                    # two renames still leaves `<live>.old` on disk
-                    os.rename(old, live)
-                    raise
-                swapped.append((live, old))
-            # every swap landed: only now drop the previous meta copies
-            # (dropping them per-swap would strand the FIRST swap in its
-            # new state when the SECOND fails and the data dirs revert)
-            for live, old in swapped:
-                shutil.rmtree(old, ignore_errors=True)
-        except BaseException:
-            # undo in reverse: completed meta swaps back (their .old
-            # copies still exist), then children (a sub-cell id may
-            # reuse a split parent's id when that parent tie-broke a
-            # member into a sibling cell), then the parents into place
-            for live, old in swapped:
-                if os.path.isdir(old):
-                    shutil.rmtree(live, ignore_errors=True)
-                    os.rename(old, live)
-            for d in created_children:
-                shutil.rmtree(d, ignore_errors=True)
-            for src in moved_aside:
-                aside = os.path.join(path, f".{os.path.basename(src)}.old")
-                if not os.path.exists(src) and os.path.isdir(aside):
-                    os.rename(aside, src)
-            raise
-        for src in moved_aside:
-            shutil.rmtree(
-                os.path.join(path, f".{os.path.basename(src)}.old"),
-                ignore_errors=True,
-            )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(cents_new_dir, ignore_errors=True)
-        shutil.rmtree(stats_new_dir, ignore_errors=True)
-    return cells
-
-
-def ivf_index_compact(
-    spark,
-    index_name: str = "ivf_index",
-    max_files_per_cell: int = 1,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict[int, int]:
-    """Compact cell partitions that have accreted small files: every
-    :func:`ivf_index_append` lands ≥1 new file per touched cell, so after
-    N daily batches a probe opens N files per probed cell — at 100 TB
-    scan cost becomes file-open/footer overhead, not bytes. Cells whose
-    file count exceeds ``max_files_per_cell`` are rewritten (sized from
-    measured bytes, like operators/compaction.compact) and swapped in;
-    contents, fingerprint, and probe results are unchanged. The whole
-    list-read-swap span holds the single-writer lock: the staged rewrite
-    reads whatever files exist when the Spark job runs, so a concurrent
-    append landing a file between the read and the swap would leave that
-    file in place while its rows are ALSO in the rewrite — duplicated
-    rows, which the lock turns into a :class:`ConcurrentIndexMutation`
-    on the append side instead. Returns ``{cell_id: new_file_count}``
-    for the compacted cells."""
-    path = _ivf_index_path(spark, index_name)
-    with _index_write_lock(path):
-        return _compact_cells_locked(
-            spark, path, max_files_per_cell, target_file_bytes
-        )
-
-
-def _compact_cells_locked(
-    spark,
-    path: str,
-    max_files_per_cell: int = 1,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict[int, int]:
-    """The per-cell rewrite half of :func:`ivf_index_compact`; the caller
-    holds the index write lock (``ivf_index_append`` runs this inside its
-    own lock span so no second writer can slip between publish and
-    compaction). Per cell, the original part files are RENAMED ASIDE to
-    dot-prefixed names Spark ignores — never unlinked — until every
-    staged replacement file has landed: an exception undoes the staged
-    files and restores the originals, so the cell's rows keep a live
-    copy throughout. (The previous shape unlinked originals first; a
-    failure in the staged renames then hit the staging sweep and
-    destroyed the only copy of the cell's rows.)"""
-    import glob
-    import math
-    import os
-    import shutil
-    import uuid
-
-    from .compaction import dataset_bytes
-
-    done: dict[int, int] = {}
-    for cell_dir in sorted(glob.glob(os.path.join(path, "cell_id=*"))):
-        parts = glob.glob(os.path.join(cell_dir, "*.parquet"))
-        if len(parts) <= max_files_per_cell:
-            continue
-        cell = int(os.path.basename(cell_dir).split("=", 1)[1])
-        n_files = max(
-            1, math.ceil(dataset_bytes(spark, cell_dir) / target_file_bytes)
-        )
-        staging = f"{path}__staging_{uuid.uuid4().hex}"
-        hidden: list[tuple[str, str]] = []  # (original, aside)
-        landed: list[str] = []
-        try:
-            (
-                spark.read.parquet(cell_dir)
-                .coalesce(n_files)
-                .write.mode("overwrite")
-                .parquet(staging)
-            )
-            try:
-                for part in parts:
-                    aside = os.path.join(
-                        cell_dir, f".{os.path.basename(part)}.old"
-                    )
-                    # same refusal policy as rebalance: a stale aside is
-                    # crash residue possibly holding the only copy of
-                    # rows — rename-over-file would silently replace it
-                    if os.path.exists(aside):
-                        raise RuntimeError(
-                            f"stale aside {aside} exists — crash residue; "
-                            "run ivf_index_repair before compacting"
-                        )
-                    os.rename(part, aside)
-                    hidden.append((part, aside))
-                for part in glob.glob(os.path.join(staging, "*.parquet")):
-                    dst = os.path.join(cell_dir, os.path.basename(part))
-                    os.rename(part, dst)
-                    landed.append(dst)
-            except BaseException:
-                # undo: staged files out, originals back — the cell is
-                # byte-identical to before the call
-                for dst in landed:
-                    try:
-                        os.unlink(dst)
-                    except FileNotFoundError:
-                        pass
-                for part, aside in hidden:
-                    if os.path.exists(aside) and not os.path.exists(part):
-                        os.rename(aside, part)
-                raise
-            for _, aside in hidden:
-                try:
-                    os.unlink(aside)
-                except FileNotFoundError:
-                    pass
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        done[cell] = n_files
-    return done
-
-
-#: Per-session memo of corpus fingerprints, keyed by (applicationId,
-#: analyzed-plan semantic hash): a probe loop re-verifying the same corpus
-#: pays the fingerprint scan ONCE, not once per probe batch — at 100 TB a
-#: per-probe full id scan would defeat the stored index. Plan-keyed, so it
-#: assumes the corpus a plan denotes is immutable within the session (the
-#: same contract the stored fingerprint itself rests on).
-_CORPUS_FP_CACHE: dict[tuple, dict] = {}
-
-
-def _corpus_fingerprint_cached(
-    df: DataFrame, id_col: str, fresh: bool = False
-) -> dict:
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df._jdf.queryExecution().analyzed().semanticHash(),
-        id_col,
-    )
-    fp = None if fresh else _CORPUS_FP_CACHE.get(key)
-    if fp is None:
-        # a fresh recompute REPLACES the memo entry: later cached probes
-        # of the same plan see the corrected fingerprint, not the stale one
-        fp = _CORPUS_FP_CACHE[key] = _corpus_fingerprint(df, id_col)
-    return fp
-
-
-def _invalidate_fp_cache(spark) -> None:
-    """Drop this session's memoized corpus fingerprints. Called by every
-    index MUTATION entry point (build/append): a mutation is the signal
-    that the caller's corpus is moving — e.g. a parquet directory that a
-    batch was just appended to — and a plan's semantic hash does not see
-    file-level growth, so a memoized fingerprint computed before the
-    mutation would keep matching the PRE-mutation stored fingerprint and
-    let a probe silently serve neighbors from a different corpus (the
-    exact misuse the guard exists to catch)."""
-    app = spark.sparkContext.applicationId
-    for key in [k for k in _CORPUS_FP_CACHE if k[0] == app]:
-        del _CORPUS_FP_CACHE[key]
-
-
-def ivf_index_probe(
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    nprobe: int = 3,
-    index_name: str = "ivf_index",
-    expected_corpus: DataFrame | None = None,
-    expected_fingerprint: dict | None = None,
-    verify_fresh: bool = False,
-) -> DataFrame:
-    """Serve top-k from a stored IVF index: queries are assigned to their
-    ``nprobe`` best cells against the FROZEN stored centroids, then joined
-    to the index on the PARTITION column — Catalyst turns the broadcast
-    join into dynamic partition pruning, so only nprobe·Q cell directories
-    are listed and read (plan-gated in tests/test_plan_quality.py).
-
-    ``expected_corpus`` is the misuse guard the bare ``rebuild=False``
-    reuse used to lack: pass the corpus the caller BELIEVES the index
-    serves and the stored fingerprint is compared (count + id-hash XOR,
-    one column-pruned scan, MEMOIZED per session+corpus-plan so a probe
-    loop pays it once); a mismatch raises instead of silently returning
-    neighbors from a different corpus. The memo assumes the files a
-    corpus plan reads are IMMUTABLE between probes — the same contract
-    the stored fingerprint itself rests on; index mutations
-    (build/append) invalidate the session's memo, but files changed
-    OUTSIDE this module (a parquet dir that grew behind the same plan)
-    are invisible to the plan hash — pass ``verify_fresh=True`` to
-    recompute the fingerprint for this probe. Callers that persist their
-    corpus fingerprint alongside the corpus can pass
-    ``expected_fingerprint`` directly and skip the scan entirely — the
-    zero-scan serving shape.
-
-    READER EXCLUSION: probes take no lock, so a probe that overlaps a
-    :func:`ivf_index_rebalance` / :func:`ivf_index_compact` publish
-    window can list the index mid-swap (split parents renamed aside
-    before their staged children land) and silently return top-k missing
-    those cells' rows. The single-writer lock serializes WRITERS only —
-    schedule probes and structural maintenance apart (maintenance
-    windows), or route probes through a session that calls
-    :func:`ivf_index_verify` after maintenance. Plain appends are safe
-    to overlap: cell files are only ever ADDED, so a concurrent reader
-    sees a consistent (possibly pre-append) corpus."""
-    from pyspark.sql import Window
-
-    spark = queries.sparkSession
-    path = _ivf_index_path(spark, index_name)
-    if expected_fingerprint is None and expected_corpus is not None:
-        expected_fingerprint = _corpus_fingerprint_cached(
-            expected_corpus, id_col, fresh=verify_fresh
-        )
-    if expected_fingerprint is not None:
-        stored = _fp_core(_read_fingerprint(path))
-        actual = _fp_core(expected_fingerprint)
-        if stored != actual:
-            raise ValueError(
-                f"stored IVF index '{index_name}' does not match the corpus "
-                f"being queried: index fingerprint {stored}, corpus "
-                f"fingerprint {actual} — rebuild the index (or append the "
-                "missing batch) instead of reusing it"
-            )
-    index = spark.read.parquet(path)
-    cents = spark.read.parquet(f"{path}__meta/centroids")
-    q = _ivf_assign(
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double_name(vec_col).alias("qv")
-        ),
-        cents,
-        "query_id",
-        "qv",
-        keep=nprobe,
-    ).select(
-        # match the index's INFERRED partition-column dtype (int while
-        # dir values fit, long once rebalance installs vec_id-sized cell
-        # ids): a fixed int cast would wrap ids above 2^31 and a
-        # mismatched type would put a cast on the partition side of the
-        # join, risking the dynamic-partition-pruning shape
-        F.col("cent_id").cast(index.schema["cell_id"].dataType).alias("cell_id"),
-        "query_id",
-        "qv",
-    )
-
-    scored = (
-        index.withColumn("_nc", _norm_col("cv"))
-        .join(F.broadcast(q.withColumn("_nq", _norm_col("qv"))), "cell_id")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cosine_pre("qv", "cv", "_nq", "_nc").alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rk").alias("rank"),
-        )
-    )
-
-
-def ivf_partitioned_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    centroid_mod: int = 50,
-    nprobe: int = 3,
-    max_centroids: int = 256,
-    index_name: str = "ivf_index",
-    rebuild: bool = True,
-) -> DataFrame:
-    """:func:`ivf_topk` with the corpus side served from a STORED index —
-    the shape SCALE.md promises for 100 TB: the cell assignment is written
-    ONCE as parquet partitioned by ``cell_id``, and every probe reads only
-    the probed cells via partition pruning instead of re-assigning (and
-    re-scanning) the whole corpus per query batch.
-
-    Build: one assignment pass (broadcast centroids, max-cosine cell) →
-    ``partitionBy(cell_id)`` parquet under the session staging area (the
-    heartbeat-swept per-application dir of
-    sources/parquet.materialize_result). Probe: scan the index joined to
-    the broadcast (query → nprobe cells) frame on the PARTITION column,
-    which Catalyst turns into dynamic partition pruning — the scan's
-    PartitionFilters carry a dynamicpruning expression, so only nprobe·Q
-    cell directories are listed and read (plan-gated in
-    tests/test_plan_quality.py). Results are row-identical to
-    :func:`ivf_topk` (asserted in tests/test_similarity.py) and share its
-    DuckDB oracle.
-
-    ``rebuild=False`` reuses an index of the same ``index_name`` already
-    built BY THIS SESSION (the path is applicationId-scoped, so a stale
-    index from another session can never be picked up) — the amortized
-    serving shape, where probes pay only the pruned scan. Reuse is
-    fingerprint-VERIFIED: the stored index's corpus fingerprint must match
-    the ``corpus`` argument or the probe raises, so a wrong ``index_name``
-    produces an error, never a silently wrong answer. Incremental
-    maintenance lives in :func:`ivf_index_append`.
-    """
-    import os
-
-    spark = corpus.sparkSession
-    path = _ivf_index_path(spark, index_name)
-    freshly_built = False
-    if rebuild or path not in _BUILT_IVF_INDEXES or not os.path.isdir(path):
-        build_ivf_index(
-            corpus, vec_col, id_col, centroid_mod, max_centroids, index_name
-        )
-        freshly_built = True
-    return ivf_index_probe(
-        queries,
-        vec_col,
-        id_col,
-        k=k,
-        nprobe=nprobe,
-        index_name=index_name,
-        expected_corpus=None if freshly_built else corpus,
-    )
-
-
 def lsh_plane_signs(num_planes: int, dim: int, seed: int = 7) -> list[list[int]]:
     """The deterministic ±1 Rademacher hyperplanes used by
     :func:`lsh_bucketed_topk`: sign d of plane p is the parity of

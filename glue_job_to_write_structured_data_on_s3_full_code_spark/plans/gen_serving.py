@@ -1,17 +1,23 @@
-"""Generational-index serving queries — REGISTERED in the r13 swap.
+"""Stored-IVF serving queries, all on the generational index
+(operators/index_store.py) — the engine's one stored ANN index.
 
-These are the GENERATIONAL (object-store-safe) stored-IVF index's two
-serving paths, in registrable ``(spark, sf_dir) -> DataFrame`` form.
-Drafted round 11, pre-validated round 12 (gate-shaped parity tests in
-tests/test_r13_swap_candidates.py against
-:data:`~.llm_ops.EMBEDDING_IVF_ORACLE`; benched as ``bench.py``
-EXTRA_BENCH rows since round 11), registered round 13 when the
-rotation freeze ended (COVERAGE.md "Retire-and-swap shortlist").
+Every query here is ``(spark, sf_dir) -> DataFrame`` and keeps its index
+under a per-query name in this application's staging dir, so repeated
+invocations (the bench loop, a query service) measure the SERVING cost
+— one pointer read plus manifest-pruned cell-file reads — not the
+amortized build. The lifecycle queries reach their index state through
+:func:`_converge`: each lifecycle step commits exactly one pointer
+sequence, so the head sequence says which steps an earlier (possibly
+crashed) invocation already committed, and only the rest run.
 
-Scale shape (the reason these deserve gate slots): a probe is one
-pointer GET + nprobe·Q manifest-listed file reads — zero object-store
-LIST, zero rename — and an append commit is two small PUTs regardless
-of index size. See operators/index_store.py.
+Probes that serve a corpus-complete index verify the committed corpus
+fingerprint against ``embeddings`` on every call (:func:`_probe`): one
+small aggregate job, never memoized, so an index that does not hold the
+corpus being queried raises instead of answering.
+
+Scale shape: a probe is one pointer GET + nprobe·Q manifest-listed file
+reads — zero object-store LIST, zero rename — and an append commit is
+two small PUTs regardless of index size.
 """
 
 from __future__ import annotations
@@ -22,65 +28,175 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.index_store import (
+    _corpus_fingerprint,
     gen_index_append,
     gen_index_build,
     gen_index_built,
+    gen_index_cell_skew,
+    gen_index_compact,
+    gen_index_head,
     gen_index_probe,
+    gen_index_rebalance,
 )
 from ..session import tune
 from ..sources.parquet import read_table
-from .llm_ops import EMBEDDING_IVF_BASE_ORACLE, EMBEDDING_IVF_ORACLE
+from .llm_ops import (
+    EMBEDDING_IVF_BASE_ORACLE,
+    EMBEDDING_IVF_ORACLE,
+    IVF_CELL_SKEW_ORACLE,
+    IVF_REBALANCED_ORACLE,
+)
 
 
 def _sf_tag(sf_dir: str) -> str:
     return os.path.basename(os.path.normpath(sf_dir))
 
 
-def gen_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve top-5 (nprobe=3) from a committed single-generation index.
+def _base(emb: DataFrame) -> DataFrame:
+    """The build corpus of the append lifecycles: ``vec_id % 50 != 17``.
+    The held-out residue class contains no centroid id (centroids are
+    ``vec_id % 50 == 0``), so the base build's frozen centroid set equals
+    the full corpus's and base ∪ appended batches probes row-identically
+    to a full build."""
+    return emb.where(F.col("vec_id") % 50 != 17)
 
-    The index is built once per (session, sf_dir) and reused — repeated
-    invocations (the bench loop, a query service) measure the SERVING
-    cost: one pointer read + manifest-pruned cell-file reads. Rows are
-    identical to the in-memory ``ivf_topk`` (same centroids, probe set,
-    scoring), so the query hash-matches ``EMBEDDING_IVF_ORACLE``.
-    """
+
+def _batch(emb: DataFrame) -> DataFrame:
+    return emb.where(F.col("vec_id") % 50 == 17)
+
+
+def _converge(spark: SparkSession, index_name: str, steps: list) -> None:
+    """Run the lifecycle ``steps`` the index has not committed yet. Step
+    ``i`` commits sequence ``i + 1``, so one pointer read tells how far
+    an earlier invocation got: a crash between steps resumes at the
+    first missing commit rather than freezing a partial index into
+    serving, and a converged index runs no step at all. The index must
+    be private to its query (no other writer advances its sequence)."""
+    seq, _head = gen_index_head(spark, index_name=index_name)
+    for step in steps[seq or 0:]:
+        step()
+
+
+def _probe(emb: DataFrame, index_name: str, fp: dict | None = None) -> DataFrame:
+    """The registered probe shape — top-5 at nprobe=3 for ``vec_id < 10``
+    — refusing to answer unless the index's committed fingerprint is
+    ``emb``'s (``fp`` when the caller already computed it)."""
+    return gen_index_probe(
+        emb.where(F.col("vec_id") < 10),
+        k=5,
+        nprobe=3,
+        index_name=index_name,
+        expected_fingerprint=fp or _corpus_fingerprint(emb, "vec_id"),
+    )
+
+
+def gen_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Serve top-5 (nprobe=3) from a single-generation index built on the
+    full corpus. Row-identical to the in-memory ``ivf_topk`` (same
+    centroids, probe set, scoring), so the query hash-matches
+    ``EMBEDDING_IVF_ORACLE``. Also registered as
+    ``embedding_ivf_indexed_topk``."""
     tune(spark)
     emb = read_table(spark, sf_dir, "embeddings")
     name = f"gen_ivf_bench_{_sf_tag(sf_dir)}"
-    if not gen_index_built(spark, name):
-        gen_index_build(emb, index_name=name)
-    return gen_index_probe(
-        emb.where(F.col("vec_id") < 10), k=5, nprobe=3, index_name=name
+    _converge(spark, name, [lambda: gen_index_build(emb, index_name=name)])
+    return _probe(emb, name)
+
+
+def _accreted_index(spark: SparkSession, emb: DataFrame, sf_dir: str) -> str:
+    """Build on the base corpus, append the held-out batch against the
+    FROZEN centroids: a two-fileset manifest, the shape a long-appended
+    index serves before compaction. Returns the index name."""
+    name = f"gen_ivf_app_bench_{_sf_tag(sf_dir)}"
+    _converge(
+        spark,
+        name,
+        [
+            lambda: gen_index_build(_base(emb), index_name=name),
+            lambda: gen_index_append(_batch(emb), index_name=name),
+        ],
     )
+    return name
 
 
 def gen_ivf_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve from a TWO-fileset manifest (build + appended batch) — the
-    accreted shape a long-appended index pays before compaction.
-
-    The append sits OUTSIDE the build gate: a pointer can exist with the
-    append missing (warm-run append failure), which would silently time
-    a one-fileset probe as the accreted row — the idempotency token
-    makes this a cheap replay no-op once applied, and a real append
-    whenever it is not. The appended corpus is the FULL embeddings
-    table, so the same ``EMBEDDING_IVF_ORACLE`` applies (the build's
-    base excludes ``vec_id % 50 == 17``, which never removes a
-    ``vec_id % 50 == 0`` centroid).
-    """
+    """Serve from the accreted (build + appended batch) index. The probe
+    verifies the committed fingerprint against the FULL corpus, so the
+    gate row also exercises the XOR composition build fp ⊕ batch fp ==
+    full-corpus fp, and hash-matches ``EMBEDDING_IVF_ORACLE``. Registered
+    as ``gen_ivf_append`` and ``embedding_ivf_index_append``."""
     tune(spark)
     emb = read_table(spark, sf_dir, "embeddings")
-    name = f"gen_ivf_app_bench_{_sf_tag(sf_dir)}"
-    if not gen_index_built(spark, name):
-        gen_index_build(emb.where(F.col("vec_id") % 50 != 17), index_name=name)
-    gen_index_append(
-        emb.where(F.col("vec_id") % 50 == 17),
-        index_name=name,
-        idempotency_token="bench:b0",
+    return _probe(emb, _accreted_index(spark, emb, sf_dir))
+
+
+def embedding_ivf_cell_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Drift audit of the accreted index: per-cell ``rows_now`` against
+    the build commit's counts (:func:`gen_index_cell_skew` — the pointer
+    history is the baseline). Appends against frozen centroids make hot
+    cells grow when the batch distribution drifts; ``growth`` is the
+    signal :func:`embedding_ivf_rebalanced_topk` re-splits on."""
+    tune(spark)
+    emb = read_table(spark, sf_dir, "embeddings")
+    return gen_index_cell_skew(spark, index_name=_accreted_index(spark, emb, sf_dir))
+
+
+def embedding_ivf_rebalanced_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The full maintenance lifecycle: build → append → audit → re-split
+    the hottest cell (max ``rows_now``, cell_id tie-break) into 2
+    sub-cells → probe. Sub-centroids are the cell's two smallest-id
+    members and only that cell's rows are reassigned
+    (:func:`gen_index_rebalance`), so the whole lifecycle — including
+    the refined probe answer — is replayed by the DuckDB oracle."""
+    tune(spark)
+    emb = read_table(spark, sf_dir, "embeddings")
+    name = f"gen_ivf_rebal_{_sf_tag(sf_dir)}"
+
+    def split_hottest() -> None:
+        hot = (
+            gen_index_cell_skew(spark, index_name=name)
+            .orderBy(F.col("rows_now").desc(), "cell_id")
+            .first()["cell_id"]
+        )
+        gen_index_rebalance(spark, index_name=name, cells=[int(hot)], factor=2)
+
+    _converge(
+        spark,
+        name,
+        [
+            lambda: gen_index_build(_base(emb), index_name=name),
+            lambda: gen_index_append(_batch(emb), index_name=name),
+            split_hottest,
+        ],
     )
-    return gen_index_probe(
-        emb.where(F.col("vec_id") < 10), k=5, nprobe=3, index_name=name
+    return _probe(emb, name)
+
+
+def embedding_ivf_compacted_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Compaction in the lifecycle: the held-out batch lands as three
+    appends (three file-sets per touched cell), then
+    :func:`gen_index_compact` rewrites the snapshot into one
+    self-contained generation. The probe is row-identical to a full
+    build — it hash-matches ``EMBEDDING_IVF_ORACLE`` — so this row
+    proves compaction changes layout, never content."""
+    tune(spark)
+    emb = read_table(spark, sf_dir, "embeddings")
+    name = f"gen_ivf_compact_{_sf_tag(sf_dir)}"
+    appends = [
+        # the %50==17 batch in three slices
+        lambda r=residue: gen_index_append(
+            emb.where(F.col("vec_id") % 150 == r), index_name=name
+        )
+        for residue in (17, 67, 117)
+    ]
+    _converge(
+        spark,
+        name,
+        [lambda: gen_index_build(_base(emb), index_name=name)]
+        + appends
+        + [lambda: gen_index_compact(spark, index_name=name)],
     )
+    return _probe(emb, name)
 
 
 def gen_ivf_rollback_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,8 +213,8 @@ def gen_ivf_rollback_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Crash-safe by state inspection, NOT a build-once boolean: gating the
     append+rollback on ``gen_index_built`` would freeze a crash between
-    build and rollback into permanently-wrong serving (the hazard
-    :func:`gen_ivf_append_probe` documents). Instead every invocation
+    build and rollback into permanently-wrong serving. Instead every
+    invocation
     reads the commit ledger (manifest-only) and converges: no index →
     build; build only → append then roll back; head not serving the
     build snapshot → roll back; already rolled back → probe.
@@ -137,9 +253,8 @@ def gen_ivf_rollback_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def gen_streaming_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The GENERATIONAL twin of ``streaming_ivf_index_maintenance``: a
-    stream of embedding micro-batches maintains the object-store-safe
-    index through ``foreachBatch`` → :func:`gen_index_append`, with the
+    """The stored index maintained by a STREAM: embedding micro-batches
+    land through ``foreachBatch`` → :func:`gen_index_append`, with the
     checkpoint-namespaced idempotency token making foreachBatch's
     at-least-once delivery exactly-once at the INDEX (a replayed
     batch_id is a pointer-level no-op — Structured Streaming commits
@@ -147,56 +262,51 @@ def gen_streaming_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     token is exactly the replay window). Commit cost per micro-batch is
     two small pointer PUTs + the batch's own cell files regardless of
     index size, so the shape holds on a 100 TB index under continuous
-    arrival. The closing probe hash-matches the full-corpus IVF oracle
-    (composition: base ∪ batches == full corpus; frozen centroids).
-    Registered in the r14 swap; parity pinned by
-    tests/test_r14_swap_candidates.py.
+    arrival. The closing probe verifies the full-corpus fingerprint
+    (composition: base ∪ batches == full corpus; frozen centroids) and
+    hash-matches the full-corpus IVF oracle. Registered as
+    ``gen_streaming_ivf_maintenance`` and
+    ``streaming_ivf_index_maintenance``.
 
     Crash-safe by COMPLETION gating, not a build-once boolean: the
     harness's stream checkpoint is a temp dir, so a crash mid-stream
-    cannot resume from it — instead every invocation compares the commit
-    ledger's head row count against the full corpus and, if the index is
-    partial (a crash between build and the last append), REBUILDS the
-    base as a fresh generation (one CAS commit; the partial appends
-    become superseded history) and re-runs the whole stream clean.
-    Within one stream run, foreachBatch replay stays exactly-once via
-    the checkpoint-namespaced token.
+    cannot resume from it — instead every invocation compares the head
+    commit's row count (one pointer read) against the corpus and, if the
+    index is partial (a crash between build and the last append),
+    REBUILDS the base as a fresh generation (one CAS commit; the partial
+    appends become superseded history) and re-runs the whole stream
+    clean. Within one stream run, foreachBatch replay stays exactly-once
+    via the checkpoint-namespaced token.
     """
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    from ..operators.index_store import gen_index_history
+    import shutil
+    import tempfile
 
     tune(spark)
     emb = read_table(spark, sf_dir, "embeddings")
     name = f"gen_ivf_stream_{_sf_tag(sf_dir)}"
-    expected_rows = emb.count()
-    complete = False
-    if gen_index_built(spark, name):
-        ledger = gen_index_history(spark, index_name=name).collect()
-        complete = ledger[-1].rows == expected_rows
-    if not complete:
-        gen_index_build(emb.where(F.col("vec_id") % 50 != 17), index_name=name)
-        work = _tempfile.mkdtemp(prefix="gen_stream_ivf_")
-        in_dir = _os.path.join(work, "in")
-        _os.makedirs(in_dir)
+    fp = _corpus_fingerprint(emb, "vec_id")
+    _seq, head = gen_index_head(spark, index_name=name)
+    if head is None or head["fingerprint"]["rows"] != fp["rows"]:
+        gen_index_build(_base(emb), index_name=name)
+        work = tempfile.mkdtemp(prefix="gen_stream_ivf_")
+        in_dir = os.path.join(work, "in")
+        os.makedirs(in_dir)
         # the %50==17 batch arrives as three micro-batches (one file per
         # trigger, staggered mtimes fix the arrival order)
         for i, residue in enumerate((17, 67, 117)):
             b = emb.where(F.col("vec_id") % 150 == residue).select(
                 "vec_id", "embedding"
             )
-            tmp = _os.path.join(work, f"t{i}")
+            tmp = os.path.join(work, f"t{i}")
             b.coalesce(1).write.parquet(tmp)
-            f = [x for x in _os.listdir(tmp) if x.endswith(".parquet")][0]
-            dst = _os.path.join(in_dir, f"part-{i:03d}.parquet")
-            _shutil.move(_os.path.join(tmp, f), dst)
-            _shutil.rmtree(tmp)
-            now = _os.stat(dst).st_mtime
-            _os.utime(dst, (now - 1000 + i * 100, now - 1000 + i * 100))
+            f = [x for x in os.listdir(tmp) if x.endswith(".parquet")][0]
+            dst = os.path.join(in_dir, f"part-{i:03d}.parquet")
+            shutil.move(os.path.join(tmp, f), dst)
+            shutil.rmtree(tmp)
+            now = os.stat(dst).st_mtime
+            os.utime(dst, (now - 1000 + i * 100, now - 1000 + i * 100))
 
-        ckpt = _os.path.join(work, "ckpt")
+        ckpt = os.path.join(work, "ckpt")
 
         def _append(batch_df, batch_id):
             if batch_df.isEmpty():
@@ -219,10 +329,8 @@ def gen_streaming_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
                 .awaitTermination()
             )
         finally:
-            _shutil.rmtree(work, ignore_errors=True)
-    return gen_index_probe(
-        emb.where(F.col("vec_id") < 10), k=5, nprobe=3, index_name=name
-    )
+            shutil.rmtree(work, ignore_errors=True)
+    return _probe(emb, name, fp)
 
 
 def gen_index_catalog_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -417,25 +525,37 @@ FROM embeddings WHERE vec_id % 50 != 17
 """
 
 
-# `gen_ivf_append` is the name bench.py has recorded for the two-fileset
-# probe since round 11 — the registry row keeps it so BENCH_r* history
-# lines up with the gate row. gen_ivf_rollback_probe and
-# gen_streaming_ivf_maintenance were staged as r14 swap candidates
-# (pre-validated by tests/test_r14_swap_candidates.py since round 13) and
-# REGISTERED in the r14 swap, paired with two same-round retirements in
-# plans/relational.py so the registry stays at its 200-row saturation
-# point (see COVERAGE.md "Retire-and-swap").
+# One body may serve several registered names: the embedding_ivf_* and
+# streaming_ivf_* names predate the generational store and keep their
+# oracles and bench history; `gen_ivf_append` is the name bench.py has
+# recorded for the accreted-index probe since round 11.
 REGISTRY: list[tuple] = [
     ("gen_ivf_probe", gen_ivf_probe, EMBEDDING_IVF_ORACLE),
+    ("embedding_ivf_indexed_topk", gen_ivf_probe, EMBEDDING_IVF_ORACLE),
     ("gen_ivf_append", gen_ivf_append_probe, EMBEDDING_IVF_ORACLE),
+    ("embedding_ivf_index_append", gen_ivf_append_probe, EMBEDDING_IVF_ORACLE),
+    ("embedding_ivf_cell_skew", embedding_ivf_cell_skew, IVF_CELL_SKEW_ORACLE),
+    (
+        "embedding_ivf_rebalanced_topk",
+        embedding_ivf_rebalanced_topk,
+        IVF_REBALANCED_ORACLE,
+    ),
+    (
+        "embedding_ivf_compacted_probe",
+        embedding_ivf_compacted_probe,
+        EMBEDDING_IVF_ORACLE,
+    ),
     ("gen_ivf_rollback_probe", gen_ivf_rollback_probe, EMBEDDING_IVF_BASE_ORACLE),
     (
         "gen_streaming_ivf_maintenance",
         gen_streaming_ivf_maintenance,
         EMBEDDING_IVF_ORACLE,
     ),
-    # r15 swap registration (COVERAGE.md "round 14 draft" item 2): the
-    # fleet-catalog protocol invariants under the driver's DuckDB hash,
-    # paired with two same-round retirements in plans/llm_ops.py.
+    (
+        "streaming_ivf_index_maintenance",
+        gen_streaming_ivf_maintenance,
+        EMBEDDING_IVF_ORACLE,
+    ),
+    # the fleet-catalog protocol invariants under the driver's DuckDB hash
     ("gen_index_catalog_report", gen_index_catalog_report, GEN_CATALOG_ORACLE),
 ]

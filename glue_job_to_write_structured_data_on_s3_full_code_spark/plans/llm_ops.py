@@ -28,16 +28,8 @@ from ..operators.multimodal import (
     sample_frames,
 )
 from ..operators.similarity import (
-    build_ivf_index,
     cosine_neardup,
     cosine_topk,
-    ivf_cell_skew_audit,
-    ivf_index_append,
-    ivf_index_built,
-    ivf_index_compact,
-    ivf_index_probe,
-    ivf_index_rebalance,
-    ivf_partitioned_topk,
     ivf_topk,
     ivfpq_topk,
     lsh_bucketed_topk,
@@ -490,149 +482,8 @@ def embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def embedding_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN served from the STORED cell-partitioned index: the cell
-    assignment is written once as parquet ``partitionBy(cell_id)`` and the
-    probe reads only the probed cells via dynamic partition pruning — the
-    100 TB serving shape SCALE.md describes for every bucketed ANN family,
-    made real and plan-gated. Row-identical to :func:`embedding_ivf_topk`
-    (same centroids, same probe, same scoring), so it shares its oracle.
-    The index is built once per (session, sf_dir) and reused — repeated
-    invocations (the bench loop, a query service) measure the SERVING
-    cost: the dynamic-pruned probe, not the amortized build."""
-    import os
-
-    tune(spark)
-    emb = read_table(spark, sf_dir, "embeddings")
-    name = f"ivf_index_{os.path.basename(os.path.normpath(sf_dir))}"
-    return ivf_partitioned_topk(
-        emb,
-        emb.where(F.col("vec_id") < 10),
-        k=5,
-        centroid_mod=50,
-        nprobe=3,
-        index_name=name,
-        rebuild=False,
-    )
-
-
-def embedding_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL maintenance of the stored IVF index — the daily-batch
-    shape at 100 TB: build once on the base corpus, then land each new
-    embedding batch with one batch-sized assignment pass against the
-    FROZEN stored centroids, appended straight into the owning ``cell_id``
-    partition directories (never a full rebuild). Here the corpus is split
-    base/batch on ``vec_id % 50 == 17`` — a residue class that contains no
-    centroid ids (centroids are ``vec_id % 50 == 0``), so the frozen
-    base-corpus centroid set equals the full-corpus one and the
-    post-append probe is row-identical to a full rebuild: it shares
-    :func:`embedding_ivf_topk`'s complete DuckDB oracle. The probe passes
-    the full corpus as ``expected_corpus``, so the gate row also exercises
-    the fingerprint composition (build fp ⊕ batch fp == full-corpus fp) —
-    a drifted or wrong index raises rather than answering."""
-    import os
-
-    tune(spark)
-    emb = read_table(spark, sf_dir, "embeddings")
-    name = f"ivf_append_{os.path.basename(os.path.normpath(sf_dir))}"
-    if not ivf_index_built(spark, name):
-        build_ivf_index(
-            emb.where(F.col("vec_id") % 50 != 17), index_name=name
-        )
-        ivf_index_append(emb.where(F.col("vec_id") % 50 == 17), index_name=name)
-    return ivf_index_probe(
-        emb.where(F.col("vec_id") < 10),
-        k=5,
-        nprobe=3,
-        index_name=name,
-        expected_corpus=emb,
-    )
-
-
-def embedding_ivf_cell_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DRIFT AUDIT of the stored IVF index — the missing telemetry of the
-    append-only lifecycle: appends against frozen centroids make hot
-    cells grow unbounded when the batch distribution drifts, raising
-    probe cost and dropping recall with no signal. This query builds on
-    the base corpus, appends the held-out ``vec_id % 50 == 17`` batch,
-    and reports per-cell ``rows_now`` vs the build-time baseline stored
-    in ``__meta/cell_stats`` (one cell_id-pruned scan + a broadcast join
-    of the ≤256-row baseline). ``growth`` feeds
-    :func:`embedding_ivf_rebalanced_topk`'s re-split."""
-    import os
-
-    tune(spark)
-    emb = read_table(spark, sf_dir, "embeddings")
-    name = f"ivf_skew_{os.path.basename(os.path.normpath(sf_dir))}"
-    if not ivf_index_built(spark, name):
-        build_ivf_index(emb.where(F.col("vec_id") % 50 != 17), index_name=name)
-        ivf_index_append(emb.where(F.col("vec_id") % 50 == 17), index_name=name)
-    return ivf_cell_skew_audit(spark, name)
-
-
-def embedding_ivf_rebalanced_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REBALANCE closes the stored-index lifecycle: build → append →
-    audit → re-split the hottest cell → probe. The hottest cell (max
-    ``rows_now``, cell_id tie-break — a 1-row bounded collect) is split
-    into 2 sub-cells around its two smallest-id member vectors; rows of
-    that cell are reassigned by max cosine, the refined centroid set
-    replaces the parent, and cold cells are untouched (the re-split scan
-    is partition-pruned to the one hot directory). Fully deterministic,
-    so the ENTIRE lifecycle — including the refined-probe answer — is
-    replayed by the DuckDB oracle and hash-verified."""
-    import os
-
-    tune(spark)
-    emb = read_table(spark, sf_dir, "embeddings")
-    name = f"ivf_rebal_{os.path.basename(os.path.normpath(sf_dir))}"
-    if not ivf_index_built(spark, name):
-        build_ivf_index(emb.where(F.col("vec_id") % 50 != 17), index_name=name)
-        ivf_index_append(emb.where(F.col("vec_id") % 50 == 17), index_name=name)
-        hot = (
-            ivf_cell_skew_audit(spark, name)
-            .orderBy(F.col("rows_now").desc(), "cell_id")
-            .first()["cell_id"]
-        )
-        ivf_index_rebalance(spark, name, cells=[int(hot)], factor=2)
-    return ivf_index_probe(
-        emb.where(F.col("vec_id") < 10),
-        k=5,
-        nprobe=3,
-        index_name=name,
-        expected_corpus=emb,
-    )
-
-
-def embedding_ivf_compacted_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COMPACTION wired into the index lifecycle: three append batches
-    land ≥3 files in every touched cell; ivf_index_compact rewrites any
-    cell over the files-per-cell bound and swaps it in under the writer
-    lock. The probe result is row-identical to the never-appended index —
-    it shares :func:`embedding_ivf_topk`'s complete DuckDB oracle — so
-    this gate row proves compaction changes layout, never content."""
-    import os
-
-    tune(spark)
-    emb = read_table(spark, sf_dir, "embeddings")
-    name = f"ivf_compact_{os.path.basename(os.path.normpath(sf_dir))}"
-    if not ivf_index_built(spark, name):
-        build_ivf_index(emb.where(F.col("vec_id") % 50 != 17), index_name=name)
-        for residue in (17, 67, 117):  # the %50==17 batch in three slices
-            ivf_index_append(
-                emb.where(F.col("vec_id") % 150 == residue), index_name=name
-            )
-        ivf_index_compact(spark, name)
-    return ivf_index_probe(
-        emb.where(F.col("vec_id") < 10),
-        k=5,
-        nprobe=3,
-        index_name=name,
-        expected_corpus=emb,
-    )
-
-
 def _ivf_skew_oracle(centroid_mod: int = 50, max_centroids: int = 256) -> str:
-    """DuckDB replay of ivf_cell_skew_audit over the build-on-base,
+    """DuckDB replay of gen_index_cell_skew over the build-on-base,
     append-residue-17 lifecycle: assignment of the FULL corpus against
     the base centroids (residue 17 holds no centroid ids, so base and
     full centroid sets coincide), per-cell counts with and without the
@@ -1621,19 +1472,6 @@ REGISTRY = [
     ("embedding_cosine_topk", embedding_cosine_topk, EMBEDDING_COSINE_ORACLE),
     ("embedding_lsh_topk", embedding_lsh_topk, EMBEDDING_LSH_ORACLE),
     ("embedding_neardup_dedup", embedding_neardup_dedup, EMBEDDING_NEARDUP_ORACLE),
-    ("embedding_ivf_indexed_topk", embedding_ivf_indexed_topk, EMBEDDING_IVF_ORACLE),
-    ("embedding_ivf_cell_skew", embedding_ivf_cell_skew, IVF_CELL_SKEW_ORACLE),
-    (
-        "embedding_ivf_rebalanced_topk",
-        embedding_ivf_rebalanced_topk,
-        IVF_REBALANCED_ORACLE,
-    ),
-    (
-        "embedding_ivf_compacted_probe",
-        embedding_ivf_compacted_probe,
-        EMBEDDING_IVF_ORACLE,
-    ),
-    ("embedding_ivf_index_append", embedding_ivf_index_append, EMBEDDING_IVF_ORACLE),
     ("embedding_pq_topk", embedding_pq_topk, EMBEDDING_PQ_ORACLE),
     ("embedding_ivfpq_topk", embedding_ivfpq_topk, EMBEDDING_IVFPQ_ORACLE),
     ("ann_recall_report", ann_recall_report, ANN_RECALL_ORACLE),

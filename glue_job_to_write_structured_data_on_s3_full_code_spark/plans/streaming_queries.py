@@ -545,107 +545,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
 """
 
 
-def streaming_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The stored-IVF lifecycle driven by a STREAM — the deployment shape
-    where embedding batches arrive continuously: build once on the base
-    corpus, then ``foreachBatch`` lands each micro-batch through
-    :func:`ivf_index_append` (assignment against FROZEN centroids, staged
-    write, locked rename-publish, XOR fingerprint advance) with
-    compaction auto-triggered per touched cell. Micro-batches run
-    sequentially, so the single-writer lock is naturally satisfied, and
-    append is content-order-insensitive — the final index equals a full
-    rebuild regardless of how the stream was batched. The closing probe
-    passes the full corpus as ``expected_corpus`` (composition: base fp ⊕
-    every batch fp == full fp) and therefore hash-matches
-    ``embedding_ivf_topk``'s complete DuckDB oracle: a STREAMING
-    maintenance path with a full value-verified gate."""
-    from ..operators.similarity import (
-        build_ivf_index,
-        ivf_index_append,
-        ivf_index_built,
-        ivf_index_probe,
-    )
-
-    tune(spark)
-    emb = read_table(spark, sf_dir, "embeddings")
-    name = f"ivf_stream_{os.path.basename(os.path.normpath(sf_dir))}"
-    if not ivf_index_built(spark, name):
-        build_ivf_index(emb.where(F.col("vec_id") % 50 != 17), index_name=name)
-        work = tempfile.mkdtemp(prefix="stream_ivf_")
-        in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-        # the %50==17 batch arrives as three micro-batches (one file per
-        # trigger, staggered mtimes fix the arrival order)
-        for i, residue in enumerate((17, 67, 117)):
-            b = emb.where(F.col("vec_id") % 150 == residue).select(
-                "vec_id", "embedding"
-            )
-            tmp = os.path.join(work, f"t{i}")
-            b.coalesce(1).write.parquet(tmp)
-            f = [x for x in os.listdir(tmp) if x.endswith(".parquet")][0]
-            dst = os.path.join(in_dir, f"part-{i:03d}.parquet")
-            shutil.move(os.path.join(tmp, f), dst)
-            shutil.rmtree(tmp)
-            now = os.stat(dst).st_mtime
-            os.utime(dst, (now - 1000 + i * 100, now - 1000 + i * 100))
-
-        ckpt = os.path.join(work, "ckpt")
-
-        def _append(batch_df, batch_id):
-            if batch_df.isEmpty():
-                return
-            # foreachBatch is at-least-once: a crash after the append
-            # publishes but before the checkpoint commits re-delivers
-            # this batch_id on restart — the token makes the re-delivery
-            # a no-op instead of a silent double-append (duplicate ids
-            # XOR-cancel, so the fingerprint alone cannot catch it).
-            # The token is namespaced by the CHECKPOINT location, the
-            # identity batch_ids are scoped to: a restart from the same
-            # checkpoint reuses the token (replay caught), while a new
-            # checkpoint restarting ids at 0 yields a different token —
-            # a bare batch_id would collide and silently DROP that
-            # first real batch as a phantom duplicate
-            ivf_index_append(
-                batch_df,
-                index_name=name,
-                compact_after_files=2,
-                idempotency_token=f"{ckpt}:batch-{batch_id}",
-            )
-
-        try:
-            (
-                spark.readStream.schema("vec_id bigint, embedding array<float>")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(in_dir)
-                .writeStream.foreachBatch(_append)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
-    return ivf_index_probe(
-        emb.where(F.col("vec_id") < 10),
-        k=5,
-        nprobe=3,
-        index_name=name,
-        expected_corpus=emb,
-    )
-
-
-def _ivf_stream_oracle() -> str:
-    from .llm_ops import EMBEDDING_IVF_ORACLE
-
-    return EMBEDDING_IVF_ORACLE
-
-
 REGISTRY = [
-    (
-        "streaming_ivf_index_maintenance",
-        streaming_ivf_index_maintenance,
-        _ivf_stream_oracle(),
-    ),
     ("streaming_sessionization", streaming_sessionization, EVENTS_SESSION_ORACLE),
     ("streaming_anomaly_alerts", streaming_anomaly_alerts, STREAMING_ANOMALY_ORACLE),
     ("streaming_hourly_rollup", streaming_hourly_rollup, STREAMING_HOURLY_ORACLE),

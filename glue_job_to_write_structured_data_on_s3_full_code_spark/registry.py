@@ -169,20 +169,23 @@ TOUCHED_IN_ROUND: dict[str, int] = {
     "waterfall_fallback_join": 16,
     "waterfall_disjunctive_join": 16,
     "embedding_cosine_topk": 16,
-    "embedding_ivf_indexed_topk": 16,
-    "embedding_ivf_index_append": 16,
-    "embedding_ivf_cell_skew": 16,
-    "embedding_ivf_rebalanced_topk": 16,
-    "embedding_ivf_compacted_probe": 16,
     "embedding_ivf_kmeans_topk": 16,
     "embedding_ivfpq_topk": 16,
     "embedding_lsh_topk": 16,
     "ann_recall_report": 16,
-    "streaming_ivf_index_maintenance": 16,
-    "gen_ivf_probe": 16,
-    "gen_ivf_append": 16,
     "gen_ivf_rollback_probe": 16,
-    "gen_streaming_ivf_maintenance": 16,
+    # r17: the six stored-IVF names moved off the removed POSIX store onto
+    # the generational one (plans/gen_serving.py), and the twin bodies
+    # they share now verify the corpus fingerprint on every probe
+    "embedding_ivf_indexed_topk": 17,
+    "embedding_ivf_index_append": 17,
+    "embedding_ivf_cell_skew": 17,
+    "embedding_ivf_rebalanced_topk": 17,
+    "embedding_ivf_compacted_probe": 17,
+    "streaming_ivf_index_maintenance": 17,
+    "gen_ivf_probe": 17,
+    "gen_ivf_append": 17,
+    "gen_streaming_ivf_maintenance": 17,
 }
 
 

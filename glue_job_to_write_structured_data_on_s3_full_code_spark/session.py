@@ -11,6 +11,7 @@ deterministic across environments.
 from __future__ import annotations
 
 import os
+import urllib.parse
 
 from pyspark.sql import SparkSession
 
@@ -112,14 +113,17 @@ def spread_small_input(df):
     (defaults to ``defaultParallelism``) partitions by Spark itself and
     pass through untouched.
 
-    Non-local schemes (can't stat) pass through: spreading is a
-    small-local-fixture knob, and an unknown-size production input must
-    never be round-robin-shuffled on a guess. Inputs with no files at all
-    (localCheckpoint blocks, createDataFrame test frames) keep the
-    physical probe — their plans are trivial to plan, and callers there
-    control the partitioning directly. Callers passing a NON-file,
-    NON-trivial plan (one containing its own exchanges) should partition
-    explicitly rather than rely on this helper.
+    ``inputFiles()`` returns URIs, so a ``file:`` path is percent-decoded
+    before the stat (a directory named ``my data`` arrives as
+    ``my%20data``). Non-local schemes (can't stat) pass through:
+    spreading is a small-local-fixture knob, and an unknown-size
+    production input must never be round-robin-shuffled on a guess.
+    Inputs with no files at all (localCheckpoint blocks, createDataFrame
+    test frames) keep the physical probe — their plans are trivial to
+    plan, and callers there control the partitioning directly. Callers
+    passing a NON-file, NON-trivial plan (one containing its own
+    exchanges) should partition explicitly rather than rely on this
+    helper.
     """
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
@@ -131,7 +135,7 @@ def spread_small_input(df):
         charged = 0
         for uri in files:
             if uri.startswith("file:"):
-                path = uri[len("file:"):]
+                path = urllib.parse.unquote(uri[len("file:"):])
             elif "://" in uri.split("/", 1)[0] or ":" in uri.split("/", 1)[0]:
                 return df  # non-local scheme — stat impossible, pass through
             else:
@@ -171,6 +175,12 @@ def eager_checkpoint(df, label: str = "eager_checkpoint"):
     materialize_result) — enforced by a grep-style test — so the plan
     sweeps see eagerly-executed stages. Semantics are identical to the
     raw call: the stage runs now, the caller gets the truncated lineage.
+
+    Guarantee: this RUNS an eager Dataset action over ``df`` before
+    returning, so metrics of a ``df.observe(Observation)`` upstream are
+    populated and ``Observation.get`` returns at once. Callers rely on
+    that (operators/components.py, plans/linkage.py): without an action
+    ``Observation.get`` blocks forever. Pinned by tests/test_session.py.
     """
     notify_stage_observers(df, label)
     return df.localCheckpoint(eager=True)

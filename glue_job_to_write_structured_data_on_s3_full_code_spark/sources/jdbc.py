@@ -79,9 +79,12 @@ def embedded_derby_url(spark: SparkSession, db_name: str) -> str:
     exactly the app-scoped layout; a multi-process deployment uses a
     server URL instead.
     """
-    from ..operators.similarity import _ivf_index_path
+    import os
 
-    return f"jdbc:derby:{_ivf_index_path(spark, f'derby_{db_name}')};create=true"
+    from .parquet import _app_staging_dir
+
+    db_dir = os.path.join(_app_staging_dir(spark), f"derby_{db_name}")
+    return f"jdbc:derby:{db_dir};create=true"
 
 
 def read_jdbc(

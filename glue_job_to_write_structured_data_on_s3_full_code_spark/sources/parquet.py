@@ -139,26 +139,114 @@ def materialize_result(df: DataFrame, name: str) -> DataFrame:
     full TTL while still holding lazily re-scanned staged frames is
     outside the contract — such callers should copy results out of the
     staging area (or checkpoint_stage to their own path)."""
-    from ..operators.similarity import _require_posix_warehouse
     from ..session import notify_stage_observers
 
     notify_stage_observers(df, f"materialize_result:{name}")
     spark = df.sparkSession
-    # same filesystem contract as the stored-IVF index (the heartbeat
-    # touch and TTL sweep below are os.* calls): a non-local warehouse
-    # refuses loudly instead of writing junk 's3a:' dirs on the driver.
-    # checkpoint_stage(df, path) takes an explicit caller path with no
-    # os.* bookkeeping and works on any Spark-writable filesystem.
+    # the heartbeat touch and TTL sweep are os.* calls, so a non-local
+    # warehouse refuses loudly (_require_posix_warehouse) instead of
+    # writing junk 's3a:' dirs on the driver. checkpoint_stage(df, path)
+    # takes an explicit caller path with no os.* bookkeeping and works on
+    # any Spark-writable filesystem.
+    app_dir = _app_staging_dir(spark)
+    _sweep_stale_staging(os.path.dirname(app_dir), keep=os.path.basename(app_dir))
+    path = os.path.join(app_dir, name)
+    df.write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+class UnsupportedIndexFilesystem(RuntimeError):
+    """A driver-local staging path (or the generational index's default
+    pointer store) was pointed at a filesystem the ``os.*`` code behind
+    it cannot honor. Heartbeats, the TTL sweep and
+    :class:`~..operators.index_store.LocalPointerStore`'s exactly-once
+    pointer create are POSIX primitives (atomic same-directory
+    ``rename(2)``/``link(2)`` and exclusive create); object stores
+    (s3/s3a/gs/abfs/...) have neither, and ``os.path.join`` would
+    silently treat ``s3a://bucket/...`` as a relative local directory.
+    Refusing loudly beats that. Object-store deployments of the index
+    inject a conditional-PUT pointer store and pass ``root=`` (see
+    operators/index_store.py)."""
+
+
+def _require_posix_warehouse(
+    uri: str, what: str = "spark.sql.warehouse.dir"
+) -> str:
+    """Enforce the local-filesystem contract at the single chokepoint
+    every driver-side ``os.*`` path resolves through. Accepts local paths
+    (no scheme) and ``file:`` URIs, returning the plain OS path; raises
+    :class:`UnsupportedIndexFilesystem` for any other scheme. ``what``
+    names the offending setting in the error (the generational index
+    routes its explicit ``root=`` through here too)."""
+    import re
+
+    # URI-vs-path classification, done by SYNTAX rather than urlsplit's
+    # permissive parse: a plain local path may legally contain a colon in
+    # a segment ('runs:2026/idx' — not a URI: what follows the colon is
+    # not a path-absolute or authority part; 'data/v1:/idx' and
+    # '2026:/idx' — not URIs either: the head is not a legal RFC 3986
+    # scheme), while Hadoop URIs appear both as scheme://authority/path
+    # AND the single-slash scheme:/path form ('hdfs:/user/hive/warehouse'
+    # is common) — BOTH must classify as URIs or a non-file scheme slips
+    # past the refusal and state splits brain: os.* state under a local
+    # dir literally named 'hdfs:', Spark data on the real filesystem.
+    if os.path.isabs(uri):
+        return uri  # absolute local path, colons in segments and all
+    head, sep, rest = uri.partition(":")
+    if not sep or not re.fullmatch(r"[A-Za-z][A-Za-z0-9+.\-]*", head):
+        # no colon, or the head cannot be a URI scheme (must be a letter
+        # followed by letters/digits/+/-/.) — a local path either way
+        return uri
+    scheme = head.lower()
+    if scheme == "file":
+        # normalize EVERY file: form to the plain OS path Hadoop would
+        # resolve it to, keeping the path VERBATIM ('#'/'?' are legal in
+        # filenames; no URL fragment/query truncation): file://host/path
+        # drops the (local-or-meaningless) authority, file:/abs stays
+        # absolute, and file:rel is relative to the working directory —
+        # the same base the os.* layer resolves 'rel' against
+        if rest.startswith("//"):
+            after = rest[2:]
+            slash = after.find("/")
+            return after[slash:] if slash >= 0 else "/"
+        if not rest:
+            # bare 'file:' — returning '' would make downstream
+            # os.path.join silently resolve to the CURRENT WORKING
+            # DIRECTORY, a surprise location for durable state
+            raise ValueError(
+                f"{what} is the bare URI 'file:' with no path — give an "
+                f"explicit location ('file:/abs/path' or a plain path)"
+            )
+        return rest
+    if not rest.startswith("/"):
+        # scheme-shaped head but the remainder is not a URI path — a
+        # relative local name like 'runs:2026/idx'
+        return uri
+    raise UnsupportedIndexFilesystem(
+        f"driver-local staging requires a POSIX filesystem (atomic rename "
+        f"+ exclusive create) but {what} is '{uri}' (scheme '{scheme}'). "
+        f"Point the warehouse at a local/NFS path; a generational index "
+        f"on an object store takes an explicit root= plus an injected "
+        f"conditional-PUT pointer store (COVERAGE.md 'Stored IVF index: "
+        f"durability & operations runbook')."
+    )
+
+
+def _app_staging_dir(spark: SparkSession) -> str:
+    """``<warehouse>/_staged_results/<applicationId>``: this application's
+    heartbeat-swept staging dir (staged query results, default
+    generational-index roots, embedded Derby databases). Touching it
+    renews the heartbeat, so a dead session's staging is reclaimed, never
+    served, and two sessions sharing a warehouse never collide. Refuses
+    non-POSIX warehouse schemes (see :func:`_require_posix_warehouse`)."""
     warehouse = _require_posix_warehouse(
         spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
     )
-    staged_root = os.path.join(warehouse, "_staged_results")
-    app_id = spark.sparkContext.applicationId
-    _touch_heartbeat(os.path.join(staged_root, app_id))
-    _sweep_stale_staging(staged_root, keep=app_id)
-    path = os.path.join(staged_root, app_id, name)
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    app_dir = os.path.join(
+        warehouse, "_staged_results", spark.sparkContext.applicationId
+    )
+    _touch_heartbeat(app_dir)
+    return app_dir
 
 
 _STAGED_TTL_S = 24 * 3600  # staging whose heartbeat is this stale is dead

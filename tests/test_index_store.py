@@ -1,7 +1,7 @@
 """Generational (object-store-safe) stored-IVF index: pointer-CAS commit,
 manifest-pruned probes, GC-instead-of-repair, multi-writer rebase. The
-semantics pin is row-identity with the in-memory `ivf_topk` (the same
-oracle the POSIX stored index is held to)."""
+semantics pin is row-identity with the in-memory `ivf_topk` and the
+DuckDB oracles of the registered stored-index queries."""
 
 from __future__ import annotations
 
@@ -482,12 +482,8 @@ def test_gen_idempotency_token_skips_replay(spark, sf_dir, pointer_backend, nm):
 
 def test_gen_probe_fingerprint_mismatch_raises(spark, gen_shared):
     emb, _payload, idx = gen_shared
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        _corpus_fingerprint,
-    )
-
     # a subset fingerprint ≠ the indexed full corpus
-    wrong = _corpus_fingerprint(emb.where(F.col("vec_id") % 50 != 17), "vec_id")
+    wrong = gs._corpus_fingerprint(emb.where(F.col("vec_id") % 50 != 17), "vec_id")
     with pytest.raises(ValueError, match="does not match the corpus"):
         gs.gen_index_probe(
             emb.where(F.col("vec_id") < 5),
@@ -690,44 +686,42 @@ def test_gen_compact_collapses_history_and_preserves_results(spark, sf_dir, poin
 
 
 @pytest.mark.slow  # index mutation lifecycle (slow tier)
-def test_gen_rebalance_matches_posix_rebalanced_probe(spark, sf_dir, pointer_backend, nm):
-    """The generational rebalance must mirror the POSIX store's split
-    semantics exactly: same explicit split set on the same corpus in
-    both stores → row-identical probes from the refined indexes. Rows
-    and fingerprint are unchanged (same data, new layout); the split
-    cells disappear from the manifest and their sub-cells appear."""
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_index_probe,
-        ivf_index_rebalance,
+def test_gen_rebalance_matches_rebalanced_oracle(spark, sf_dir, duck, pointer_backend, nm):
+    """The generational rebalance must match the DuckDB replay of the
+    split (_ivf_rebalanced_oracle): on a full-corpus build, splitting
+    the hottest cell (most rows, smallest id) into 2 sub-cells gives a
+    refined probe row-identical to the oracle. Rows and fingerprint are
+    unchanged (same data, new layout); the split cell disappears from
+    the manifest and its sub-cells appear."""
+    from glue_job_to_write_structured_data_on_s3_full_code_spark.plans.llm_ops import (
+        _ivf_rebalanced_oracle,
     )
+    from tests.parity import assert_parity
 
     emb = read_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 10)
-
     gs.gen_index_build(emb, index_name=nm("t_gen_rb"))
-    build_ivf_index(emb, index_name=nm("t_posix_rb"))
 
-    # pick the two biggest cells, deterministically, from the gen store
+    # the oracle's hot cell, read from the gen store's manifest
     root = gs._store_root(spark, nm("t_gen_rb"))
     _seq, latest = gs._store_for(root).read_latest()
     manifest = _manifest(spark, root, latest["gen"])
     files = [os.path.join(root, rel) for fs in manifest["cells"].values() for rel in fs]
-    counts = sorted(
-        ((r["count"], int(r["cell"])) for r in spark.read.parquet(*files).groupBy("cell").count().collect()),
-        reverse=True,
-    )
-    split_cells = sorted(c for _n, c in counts[:2])
+    counts = spark.read.parquet(*files).groupBy("cell").count().collect()
+    hot = min(counts, key=lambda r: (-r["count"], int(r["cell"])))
+    split_cells = [int(hot["cell"])]
 
-    got_split = gs.gen_index_rebalance(spark, nm("t_gen_rb"), cells=split_cells)
-    posix_split = ivf_index_rebalance(spark, nm("t_posix_rb"), cells=split_cells)
-    assert got_split == posix_split == split_cells
-
-    gen_rows = _rows(gs.gen_index_probe(q, k=5, index_name=nm("t_gen_rb")))
-    posix_rows = _rows(
-        ivf_index_probe(q, k=5, index_name=nm("t_posix_rb"), expected_corpus=emb)
+    got_split = gs.gen_index_rebalance(
+        spark, nm("t_gen_rb"), cells=split_cells, factor=2
     )
-    assert gen_rows == posix_rows and len(gen_rows) > 0
+    assert got_split == split_cells
+
+    assert_parity(
+        gs.gen_index_probe(q, k=5, nprobe=3, index_name=nm("t_gen_rb")),
+        duck,
+        _ivf_rebalanced_oracle(),
+        "gen_index_rebalance",
+    )
 
     report = gs.gen_index_verify(spark, nm("t_gen_rb"))
     assert report["consistent"]
@@ -903,27 +897,7 @@ def test_gen_gc_measures_reader_age_from_supersession(spark, sf_dir, pointer_bac
     assert built["gen"] in report2["dropped_generations"]
 
 
-def test_lock_contention_tolerates_timestampless_payload(spark, sf_dir, tmp_path):
-    """A hand-written lock payload carrying only {host, pid} must still
-    produce the actionable ConcurrentIndexMutation message, not a
-    KeyError while formatting the holder line."""
-    import json as _json
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-
-    path = str(tmp_path / "t_lock_legacy")
-    meta = f"{path}__meta"
-    os.makedirs(meta)
-    with open(os.path.join(meta, "append.lock"), "w") as fh:
-        _json.dump({"host": "ops-box", "pid": 4242}, fh)
-    with pytest.raises(
-        sim.ConcurrentIndexMutation, match=r"pid 4242 on ops-box since unknown time"
-    ):
-        with sim._index_write_lock(path):
-            pass
-
-
-@pytest.mark.slow  # index plan gate, builds on the stored index (slow tier, like its POSIX twin)
+@pytest.mark.slow  # index plan gate, builds on the stored index (slow tier)
 def test_gen_probe_reads_only_probed_cells_files(spark, gen_shared):
     """Manifest pruning is the generational analog of dynamic partition
     pruning — the probe's scan must touch exactly the probed cells'
@@ -987,25 +961,29 @@ def test_gen_cell_skew_reports_growth_against_pointer_history(spark, sf_dir, poi
     skew = gs.gen_index_cell_skew(spark, nm("t_gen_skew")).collect()
     total_added = sum(r["added"] for r in skew)
     assert total_added == batch.count()
-    assert all(r["rows_now"] >= (r["rows_then"] or 0) for r in skew)
+    assert all(r["rows_now"] >= r["rows_at_build"] for r in skew)
     # newborn cells (no baseline rows) report NULL growth, never a crash
     for r in skew:
-        if r["rows_then"] is None:
+        if r["rows_at_build"] == 0:
             assert r["growth"] is None
 
-    # feed the hottest cell to the rebalance — the audit→rebalance loop
-    hot = [int(r["cell_id"]) for r in skew if (r["added"] or 0) > 0][:1]
+    # feed the hottest cell (highest growth, newborn cells first) to the
+    # rebalance — the audit→rebalance loop
+    by_heat = sorted(
+        skew, key=lambda r: (r["growth"] is not None, -(r["growth"] or 0), r["cell_id"])
+    )
+    hot = [int(r["cell_id"]) for r in by_heat if (r["added"] or 0) > 0][:1]
     if hot:
         split = gs.gen_index_rebalance(spark, nm("t_gen_skew"), cells=hot)
         assert split == hot
         assert gs.gen_index_verify(spark, nm("t_gen_skew"))["consistent"]
-        # EMPTIED cells must still report (full_outer, like the POSIX
-        # audit): the drained split parent shows rows_now=0 with
-        # negative added, not silently vanish from the report
+        # EMPTIED cells must still report (full_outer): the drained
+        # split parent shows rows_now=0 with negative added, not
+        # silently vanish from the report
         post = {r["cell_id"]: r for r in gs.gen_index_cell_skew(spark, nm("t_gen_skew")).collect()}
         drained = post[hot[0]]
         assert drained["rows_now"] == 0
-        assert drained["added"] == -(drained["rows_then"])
+        assert drained["added"] == -(drained["rows_at_build"])
         assert drained["growth"] == 0.0
 
     # explicit baseline: skew vs the LATEST pointer is all-zero added
@@ -1020,8 +998,8 @@ def test_gen_cell_skew_reports_growth_against_pointer_history(spark, sf_dir, poi
 def test_gen_streaming_maintenance_matches_full_rebuild(spark, sf_dir, pointer_backend, nm):
     """The generational store's STREAMING deployment shape: foreachBatch
     lands each micro-batch through gen_index_append with a checkpoint-
-    namespaced idempotency token (the exact contract the POSIX
-    streaming_ivf_index_maintenance documents). Micro-batches run
+    namespaced idempotency token (the contract the registered
+    streaming_ivf_index_maintenance relies on). Micro-batches run
     sequentially, the pointer advances once per non-empty batch, and the
     closing probe is row-identical to the in-memory IVF over the full
     corpus — batch-boundary-insensitive by construction."""
@@ -1081,45 +1059,6 @@ def test_gen_streaming_maintenance_matches_full_rebuild(spark, sf_dir, pointer_b
     assert _rows(gs.gen_index_probe(q, k=5, index_name=nm("t_gen_stream"))) == _rows(
         ivf_topk(emb, q, k=5)
     )
-
-
-@pytest.mark.slow  # cross-store migration lifecycle (slow tier)
-def test_gen_import_posix_carries_content_fingerprint_and_token(spark, sf_dir, pointer_backend, nm):
-    """Migrating a POSIX index into the generational store: no
-    reassignment, probe row-identical to the source store, fingerprint
-    verification intact, and the producer's last append token still
-    detects its replay in the NEW store."""
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_index_append,
-        ivf_index_probe,
-    )
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.where(F.col("vec_id") % 50 != 17)
-    batch = emb.where(F.col("vec_id") % 50 == 17)
-    build_ivf_index(base, index_name=nm("t_mig_posix"))
-    ivf_index_append(batch, index_name=nm("t_mig_posix"), idempotency_token="ck:b3")
-
-    payload = gs.gen_index_import_posix(
-        spark, posix_index_name=nm("t_mig_posix"), index_name=nm("t_mig_gen")
-    )
-    assert payload["last_token"] == "ck:b3"
-    report = gs.gen_index_verify(spark, nm("t_mig_gen"))
-    assert report["consistent"] and report["actual"]["rows"] == emb.count()
-
-    q = emb.where(F.col("vec_id") < 10)
-    assert _rows(gs.gen_index_probe(q, k=5, index_name=nm("t_mig_gen"))) == _rows(
-        ivf_index_probe(q, k=5, index_name=nm("t_mig_posix"), expected_corpus=emb)
-    )
-    # the migrating producer replays its last delivery against the NEW
-    # store: caught by the carried token, pointer does not advance
-    n_ptrs = len(_ptrs(spark, nm("t_mig_gen")))
-    replay = gs.gen_index_append(
-        batch, index_name=nm("t_mig_gen"), idempotency_token="ck:b3"
-    )
-    assert replay["last_token"] == "ck:b3"
-    assert len(_ptrs(spark, nm("t_mig_gen"))) == n_ptrs
 
 
 def test_pointer_cas_exactly_once_across_processes(tmp_path):
@@ -1254,7 +1193,7 @@ def test_gen_explicit_root_refuses_object_store_uri(spark, sf_dir):
     this local implementation's pointer store and manifest listing are
     os.* code, so an s3a:// root would silently commit empty manifests
     under a full-corpus fingerprint instead of refusing."""
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
+    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources.parquet import (
         UnsupportedIndexFilesystem,
     )
 
@@ -1463,8 +1402,8 @@ def test_gen_lifecycle_on_uri_root_with_injected_store(
     # hot-cell rebalance over the URI root: the sub-centroid fixpoint
     # reads split-cell files and rewrites centroids through the same
     # _HadoopFS paths (the refined centroid set legitimately changes
-    # probe results — the cross-store split-semantics pin lives in
-    # test_gen_rebalance_matches_posix_rebalanced_probe)
+    # probe results — the split-semantics pin against the DuckDB replay
+    # lives in test_gen_rebalance_matches_rebalanced_oracle)
     hot = max(
         (r for r in skew), key=lambda r: (r["rows_now"], r["cell_id"])
     )["cell_id"]

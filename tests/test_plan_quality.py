@@ -444,58 +444,6 @@ def test_quality_filters_are_map_only(spark, sf_dir, queries):
         assert "Join" not in plan, f"{name}: {plan}"
 
 
-@pytest.mark.slow  # stored-index lifecycle + plan gate (~14 s)
-def test_ivf_indexed_probe_prunes_partitions(spark, sf_dir, queries):
-    # the stored-index probe must reach the cell-partitioned parquet scan
-    # with a dynamic partition pruning filter on cell_id — reading only
-    # the probed cells, never the whole index (the 100 TB serving shape)
-    # all three stored-index probe surfaces: plain, post-rebalance (re-
-    # split cells must still prune), and post-append+compaction
-    for name in (
-        "embedding_ivf_indexed_topk",
-        "embedding_ivf_rebalanced_topk",
-        "embedding_ivf_compacted_probe",
-    ):
-        df = queries[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "dynamicpruning" in plan, f"{name}: {plan}"
-        assert "SortMergeJoin" not in plan, f"{name}: {plan}"
-
-
-@pytest.mark.slow  # index mutation lifecycle plan gate (~6 s)
-def test_ivf_rebalance_scan_is_partition_pruned(spark, sf_dir, queries):
-    # the rebalance re-split must cost O(rows in the chosen cells):
-    # its scan (mirrored here — similarity.ivf_index_rebalance builds the
-    # identical where-isin on the partition column) carries the cell list
-    # as a static PartitionFilter, so only those directories are listed
-    # and read, never the whole index
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        _ivf_index_path,
-        ivf_index_built,
-    )
-
-    queries["embedding_ivf_rebalanced_topk"](spark, sf_dir)  # ensures built
-    import os
-
-    name = f"ivf_rebal_{os.path.basename(os.path.normpath(sf_dir))}"
-    assert ivf_index_built(spark, name)
-    path = _ivf_index_path(spark, name)
-    cells = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(path)
-        if d.startswith("cell_id=")
-    )[:2]
-    pruned = spark.read.parquet(path).where(F.col("cell_id").isin(cells))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell_id" in plan, plan
-    # the filter must actually reach the scan's partition filters, not
-    # survive as a post-scan Filter over all partitions
-    part_section = plan.split("PartitionFilters:", 1)[1].split("]", 1)[0]
-    assert "cell_id" in part_section, plan
-
-
 # -- registry-wide global-window sweep ---------------------------------------
 #
 # A WindowExec with an empty partition spec funnels its entire input through

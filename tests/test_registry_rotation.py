@@ -92,3 +92,18 @@ def test_prefix_names_are_registered_and_oracled() -> None:
     # equality to the oracled md5cw mode is pinned by tests/test_dedup.py)
     rows_only = {n for n in registry.VERIFIED_PREFIX if n not in registry.ORACLES}
     assert rows_only <= {"streaming_anomaly_alerts", "minhash_lsh_fast"}, rows_only
+
+
+def test_touched_entries_are_registered_and_not_future() -> None:
+    """The other half of the rotation audit: every TOUCHED_IN_ROUND key
+    names a registered query (a typo or a retired name would silently
+    give priority to nothing) and no value is past CURRENT_ROUND (a
+    future round would keep the name prioritized after its gate)."""
+    unknown = sorted(set(registry.TOUCHED_IN_ROUND) - set(registry.QUERIES))
+    assert not unknown, unknown
+    future = {
+        n: r
+        for n, r in registry.TOUCHED_IN_ROUND.items()
+        if r > registry.CURRENT_ROUND
+    }
+    assert not future, future

@@ -251,115 +251,79 @@ def test_neardup_boundary_pairs_match_oracle(spark, tmp_path):
     assert any(not kept for _, _, kept in got)
 
 
-def test_ivf_partitioned_index_matches_in_memory(spark, sf_dir):
-    """The stored cell-partitioned index must serve row-identical results
-    to the in-memory IVF (same centroids, probe set, and scoring)."""
-    import pyspark.sql.functions as F
 
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        ivf_partitioned_topk,
-        ivf_topk,
-    )
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
+def test_ivf_partitioned_index_matches_in_memory(spark, sf_dir):
+    """The stored cell-partitioned index behind the registered
+    embedding_ivf_indexed_topk must serve row-identical results to the
+    in-memory IVF (same centroids, probe set, and scoring)."""
+    from glue_job_to_write_structured_data_on_s3_full_code_spark.registry import QUERIES
 
     emb = read_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 10)
     mem = sorted(tuple(r) for r in ivf_topk(emb, q, k=5).collect())
-    idx = sorted(tuple(r) for r in ivf_partitioned_topk(emb, q, k=5).collect())
+    idx = sorted(
+        tuple(r) for r in QUERIES["embedding_ivf_indexed_topk"](spark, sf_dir).collect()
+    )
     assert mem == idx and len(mem) > 0
 
 
-@pytest.mark.slow  # index mutation lifecycle (~4 s)
-def test_ivf_index_append_matches_full_rebuild(spark, sf_dir):
-    """Build on the base corpus (minus the vec_id % 50 == 17 residue class,
-    which contains no centroid ids), append the held-out batch against the
-    FROZEN stored centroids, and the post-append probe must be
-    row-identical to the in-memory IVF over the FULL corpus — including a
-    clean fingerprint check against the full corpus (composition:
-    base fp ⊕ batch fp == full fp)."""
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_index_append,
-        ivf_index_probe,
-        ivf_topk,
-    )
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
+def _copy_embeddings(spark, sf_dir, dest, where):
+    """A one-table scale-factor dir holding the ``where`` rows of the
+    fixture's embeddings; its basename tags the registered queries'
+    index names, so each test gets private indexes."""
     emb = read_table(spark, sf_dir, "embeddings")
+    emb.where(where).write.parquet(str(dest / "embeddings.parquet"))
+    return str(dest)
+
+
+def test_stored_ivf_probe_raises_on_wrong_corpus(spark, sf_dir, tmp_path):
+    """A stored index must NEVER silently answer for a different corpus:
+    the registered probes verify the committed fingerprint against the
+    corpus they query, so an index built from other rows raises — on the
+    single-build path and on the build + append path."""
+    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import (
+        index_store as gs,
+    )
+    from glue_job_to_write_structured_data_on_s3_full_code_spark.plans.gen_serving import (
+        gen_ivf_append_probe,
+        gen_ivf_probe,
+    )
+
+    sf = _copy_embeddings(spark, sf_dir, tmp_path / "wrongcorpus", F.lit(True))
+    emb = read_table(spark, sf, "embeddings")
+    wrong = emb.where((F.col("vec_id") % 2 == 0) & (F.col("vec_id") % 50 != 17))
+    for query, index in (
+        (gen_ivf_probe, "gen_ivf_bench_wrongcorpus"),
+        (gen_ivf_append_probe, "gen_ivf_app_bench_wrongcorpus"),
+    ):
+        gs.gen_index_build(wrong, index_name=index)
+        with pytest.raises(ValueError, match="does not match the corpus"):
+            query(spark, sf)
+    # the index still serves the corpus it actually holds
     q = emb.where(F.col("vec_id") < 10)
-    build_ivf_index(
-        emb.where(F.col("vec_id") % 50 != 17), index_name="t_append_idx"
+    fp = gs._corpus_fingerprint(wrong, "vec_id")
+    out = gs.gen_index_probe(
+        q, k=5, index_name="gen_ivf_bench_wrongcorpus", expected_fingerprint=fp
     )
-    ivf_index_append(
-        emb.where(F.col("vec_id") % 50 == 17), index_name="t_append_idx"
-    )
-    got = sorted(
-        tuple(r)
-        for r in ivf_index_probe(
-            q, k=5, index_name="t_append_idx", expected_corpus=emb
-        ).collect()
-    )
-    want = sorted(tuple(r) for r in ivf_topk(emb, q, k=5).collect())
-    assert got == want and len(got) > 0
+    assert out.count() > 0
 
 
-def test_ivf_index_probe_raises_on_wrong_corpus(spark, sf_dir):
-    """rebuild=False reuse of a stored index must NEVER silently answer for
-    a different corpus: the fingerprint check turns the mismatch into a
-    raise, both through ivf_index_probe and the ivf_partitioned_topk
-    wrapper."""
-    import pytest
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_index_probe,
-        ivf_partitioned_topk,
-    )
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    build_ivf_index(emb, index_name="t_fp_idx")
-    wrong = emb.where(F.col("vec_id") % 2 == 0)
-    with pytest.raises(ValueError, match="does not match the corpus"):
-        ivf_index_probe(q, index_name="t_fp_idx", expected_corpus=wrong)
-    with pytest.raises(ValueError, match="does not match the corpus"):
-        ivf_partitioned_topk(
-            wrong, q, k=5, index_name="t_fp_idx", rebuild=False
-        )
-    # the matching corpus still verifies clean and serves
-    assert ivf_index_probe(q, k=5, index_name="t_fp_idx", expected_corpus=emb).count() > 0
-
-
-def test_ivf_index_append_is_failure_atomic(spark, sf_dir):
-    """A batch whose assignment job FAILS must leave the index and its
-    fingerprint exactly as they were: the heavy write lands in a staging
-    dir, so nothing is published before the job commits (the
+def test_stored_ivf_append_is_failure_atomic(spark, sf_dir):
+    """A batch whose assignment job FAILS must leave the served index and
+    its fingerprint exactly as they were: the batch lands in an unpointed
+    generation and only the pointer commit publishes it, so nothing is
+    published before the job succeeds (the
     partial-append-with-stale-fingerprint hazard)."""
-    import pytest
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        _ivf_index_path,
-        _read_fingerprint,
-        build_ivf_index,
-        ivf_index_append,
-        ivf_index_probe,
-        ivf_index_verify,
+    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import (
+        index_store as gs,
     )
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
 
     emb = read_table(spark, sf_dir, "embeddings")
     base = emb.where(F.col("vec_id") % 50 != 17)
-    build_ivf_index(base, index_name="t_atomic_idx")
-    path = _ivf_index_path(spark, "t_atomic_idx")
-    fp_before = _read_fingerprint(path)
+    gs.gen_index_build(base, index_name="t_atomic_idx")
+    head_before = gs.gen_index_head(spark, "t_atomic_idx")
 
-    # poison batch: the embedding UDF-free plan itself fails at execution
-    # (division inside the assignment's cosine reads a corrupt vector)
+    # poison batch: the plan itself fails at execution
     poison = emb.where(F.col("vec_id") % 50 == 17).withColumn(
         "embedding",
         F.expr("transform(embedding, x -> assert_true(false))").cast(
@@ -367,316 +331,68 @@ def test_ivf_index_append_is_failure_atomic(spark, sf_dir):
         ),
     )
     with pytest.raises(Exception):
-        ivf_index_append(poison, index_name="t_atomic_idx")
+        gs.gen_index_append(poison, index_name="t_atomic_idx")
 
-    assert _read_fingerprint(path) == fp_before, "fingerprint advanced on failure"
-    assert ivf_index_verify(spark, "t_atomic_idx")["consistent"]
+    assert gs.gen_index_head(spark, "t_atomic_idx") == head_before
+    assert gs.gen_index_verify(spark, "t_atomic_idx")["consistent"]
     # the index still serves the base corpus it actually holds
     q = emb.where(F.col("vec_id") < 10)
-    assert (
-        ivf_index_probe(
-            q, k=5, index_name="t_atomic_idx", expected_corpus=base
-        ).count()
-        > 0
+    out = gs.gen_index_probe(
+        q,
+        k=5,
+        index_name="t_atomic_idx",
+        expected_fingerprint=gs._corpus_fingerprint(base, "vec_id"),
     )
-    # and no staging garbage is left behind
-    import glob
-
-    assert not glob.glob(f"{path}__staging_*")
+    assert out.count() > 0
 
 
-def test_ivf_index_append_single_writer_lock(spark, sf_dir):
-    """Two concurrent appends must serialize-or-raise, never silently
-    drop a batch from the fingerprint: the second writer hitting the held
-    lock gets ConcurrentIndexMutation, and after the holder finishes the
-    stored fingerprint still matches the index contents."""
-    import os
-
-    import pytest
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        ConcurrentIndexMutation,
-        _index_write_lock,
-        _ivf_index_path,
-        build_ivf_index,
-        ivf_index_append,
-        ivf_index_verify,
+def test_ivf_append_replay_fast_path_runs_no_assignment(spark, sf_dir, monkeypatch):
+    """A replayed delivery must be discarded BEFORE the batch-sized
+    assignment and cell write — the whole point of exactly-once is that
+    replays are near-free (one pointer read), not full Spark jobs."""
+    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import (
+        index_store as gs,
     )
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
 
     emb = read_table(spark, sf_dir, "embeddings")
-    build_ivf_index(
-        emb.where(F.col("vec_id") % 50 != 17), index_name="t_lock_idx"
+    gs.gen_index_build(
+        emb.where(F.col("vec_id") % 50 != 17), index_name="t_fastpath_idx"
     )
-    path = _ivf_index_path(spark, "t_lock_idx")
     batch = emb.where(F.col("vec_id") % 50 == 17)
-    # writer A holds the publish lock; writer B's append must raise
-    with _index_write_lock(path):
-        with pytest.raises(ConcurrentIndexMutation, match="append.lock"):
-            ivf_index_append(batch, index_name="t_lock_idx")
-    # lock released -> the append now lands, and metadata is consistent
-    ivf_index_append(batch, index_name="t_lock_idx")
-    assert ivf_index_verify(spark, "t_lock_idx")["consistent"]
-    assert not os.path.exists(os.path.join(f"{path}__meta", "append.lock"))
+    gs.gen_index_append(batch, index_name="t_fastpath_idx", idempotency_token="b0")
+    head = gs.gen_index_head(spark, "t_fastpath_idx")
+
+    def forbidden(*a, **k):
+        raise AssertionError("replay ran the assignment job")
+
+    monkeypatch.setattr(gs, "_ivf_assign", forbidden)
+    replay = gs.gen_index_append(
+        batch, index_name="t_fastpath_idx", idempotency_token="b0"
+    )
+    assert replay == head[1]
+    assert gs.gen_index_head(spark, "t_fastpath_idx") == head
+    assert gs.gen_index_verify(spark, "t_fastpath_idx")["consistent"]
 
 
-@pytest.mark.slow  # index lifecycle + counting probe loop (~4 s)
-def test_ivf_probe_fingerprint_scan_is_memoized(spark, sf_dir):
-    """A probe loop re-verifying the SAME corpus must scan it once: the
-    fingerprint is memoized per (session, corpus plan). Passing a
-    precomputed expected_fingerprint skips the scan entirely."""
-    import pyspark.sql.functions as F
+def test_probe_verify_fresh_detects_external_corpus_growth(spark, sf_dir, tmp_path):
+    """Corpus files that grow OUTSIDE any index mutation must be caught
+    by the next probe: the registered probes recompute the corpus
+    fingerprint on every call (a memo keyed by the corpus plan could not
+    see file-level growth behind the same path), so a grown corpus
+    refuses instead of being served from the stale index."""
+    from glue_job_to_write_structured_data_on_s3_full_code_spark.registry import QUERIES
 
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
+    query = QUERIES["embedding_ivf_indexed_topk"]
+    sf = _copy_embeddings(
+        spark, sf_dir, tmp_path / "growing", F.col("vec_id") % 50 != 17
+    )
+    assert query(spark, sf).count() > 0  # builds on the base rows, serves
     emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    sim.build_ivf_index(emb, index_name="t_memo_idx")
-
-    calls = []
-    real = sim._corpus_fingerprint
-
-    def counting(df, id_col):
-        calls.append(id_col)
-        return real(df, id_col)
-
-    sim._CORPUS_FP_CACHE.clear()
-    sim._corpus_fingerprint = counting
-    try:
-        for _ in range(3):
-            sim.ivf_index_probe(
-                q, k=5, index_name="t_memo_idx", expected_corpus=emb
-            ).count()
-    finally:
-        sim._corpus_fingerprint = real
-    assert len(calls) == 1, f"fingerprint scanned {len(calls)}x for one corpus"
-
-    # precomputed fingerprint: zero scans, same guard semantics
-    fp = sim._read_fingerprint(sim._ivf_index_path(spark, "t_memo_idx"))
-    calls.clear()
-    sim._corpus_fingerprint = counting
-    try:
-        assert (
-            sim.ivf_index_probe(
-                q, k=5, index_name="t_memo_idx", expected_fingerprint=fp
-            ).count()
-            > 0
-        )
-    finally:
-        sim._corpus_fingerprint = real
-    assert calls == []
-    import pytest
-
+    emb.where(F.col("vec_id") % 50 == 17).write.mode("append").parquet(
+        f"{sf}/embeddings.parquet"
+    )
     with pytest.raises(ValueError, match="does not match the corpus"):
-        sim.ivf_index_probe(
-            q,
-            k=5,
-            index_name="t_memo_idx",
-            expected_fingerprint={"rows": 1, "id_xor": 2},
-        )
-
-
-@pytest.mark.slow  # index mutation lifecycle (~5 s)
-def test_ivf_rebalance_splits_hot_cell_and_prunes_cold(spark, sf_dir):
-    """Rebalance must re-split ONLY the requested cell: its rows land in
-    the child sub-cells, every other partition directory is untouched
-    (byte-identical file lists), the refined centroid set replaces the
-    parent, and the corpus fingerprint still matches the index contents."""
-    import glob
-    import os
-
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        _ivf_index_path,
-        build_ivf_index,
-        ivf_cell_skew_audit,
-        ivf_index_rebalance,
-        ivf_index_verify,
-    )
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    build_ivf_index(emb, index_name="t_rebal_idx")
-    path = _ivf_index_path(spark, "t_rebal_idx")
-
-    audit = ivf_cell_skew_audit(spark, "t_rebal_idx")
-    hot = int(
-        audit.orderBy(F.col("rows_now").desc(), "cell_id").first()["cell_id"]
-    )
-    hot_rows = sorted(
-        r.neighbor_id
-        for r in spark.read.parquet(f"{path}/cell_id={hot}").collect()
-    )
-    other_files = {
-        d: sorted(os.listdir(d))
-        for d in glob.glob(os.path.join(path, "cell_id=*"))
-        if d != os.path.join(path, f"cell_id={hot}")
-    }
-
-    split = ivf_index_rebalance(spark, "t_rebal_idx", cells=[hot], factor=2)
-    assert split == [hot]
-    # cold partitions byte-untouched
-    for d, files in other_files.items():
-        assert sorted(os.listdir(d)) == files
-    # the hot cell's rows all live in the child cells now
-    cents = spark.read.parquet(f"{path}__meta/centroids")
-    child_ids = sorted(
-        r.cent_id for r in cents.collect() if r.cent_id in set(hot_rows)
-    )
-    assert 1 <= len(child_ids) <= 2
-    moved = sorted(
-        r.neighbor_id
-        for cid in child_ids
-        for r in spark.read.parquet(f"{path}/cell_id={cid}").collect()
-    )
-    assert moved == hot_rows
-    # same rows overall, metadata consistent, baseline refreshed
-    assert ivf_index_verify(spark, "t_rebal_idx")["consistent"]
-    audit2 = ivf_cell_skew_audit(spark, "t_rebal_idx")
-    assert audit2.where(F.col("cell_id") == hot).count() == 0 or hot in child_ids
-    assert audit2.where(F.col("added") != 0).count() == 0
-    # no-op: nothing exceeds the growth threshold on a fresh build
-    assert ivf_index_rebalance(spark, "t_rebal_idx") == []
-
-
-@pytest.mark.slow  # stored-index lifecycle (~9 s)
-def test_ivf_compact_restores_file_count_and_results(spark, sf_dir):
-    """Five appends leave ≥5 files in the touched cells; compaction must
-    bring every cell back to one file while leaving probe results and the
-    stored fingerprint bit-identical."""
-    import glob
-    import os
-
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        _ivf_index_path,
-        build_ivf_index,
-        ivf_index_append,
-        ivf_index_compact,
-        ivf_index_probe,
-        ivf_index_verify,
-    )
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    build_ivf_index(
-        emb.where(F.col("vec_id") % 50 != 17), index_name="t_compact_idx"
-    )
-    for residue in (17, 67, 117, 167, 217):  # %50==17 in five slices
-        ivf_index_append(
-            emb.where(F.col("vec_id") % 250 == residue),
-            index_name="t_compact_idx",
-        )
-    path = _ivf_index_path(spark, "t_compact_idx")
-
-    def files_per_cell():
-        return {
-            d: len(glob.glob(os.path.join(d, "*.parquet")))
-            for d in glob.glob(os.path.join(path, "cell_id=*"))
-        }
-
-    # not every tiny batch touches every cell at this SF, but the hot
-    # cells must have accreted several files beyond the single build file
-    assert max(files_per_cell().values()) >= 3, "appends should accrete files"
-    q = emb.where(F.col("vec_id") < 10)
-    before = sorted(
-        tuple(r)
-        for r in ivf_index_probe(q, k=5, index_name="t_compact_idx").collect()
-    )
-    compacted = ivf_index_compact(spark, "t_compact_idx")
-    assert compacted, "at least the touched cells must compact"
-    assert max(files_per_cell().values()) == 1
-    after = sorted(
-        tuple(r)
-        for r in ivf_index_probe(q, k=5, index_name="t_compact_idx").collect()
-    )
-    assert after == before and len(after) > 0
-    assert ivf_index_verify(spark, "t_compact_idx")["consistent"]
-    # idempotent: nothing left over the bound
-    assert ivf_index_compact(spark, "t_compact_idx") == {}
-
-
-@pytest.mark.slow  # index mutation lifecycle (~6 s)
-def test_ivf_append_auto_compaction(spark, sf_dir):
-    """compact_after_files wires compaction into the append lifecycle:
-    with a bound of 1, every append leaves each cell at a single file,
-    and contents stay fingerprint-consistent."""
-    import glob
-    import os
-
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        _ivf_index_path,
-        build_ivf_index,
-        ivf_index_append,
-        ivf_index_verify,
-    )
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    build_ivf_index(
-        emb.where(F.col("vec_id") % 50 != 17), index_name="t_autocompact_idx"
-    )
-    for residue in (17, 67, 117):
-        ivf_index_append(
-            emb.where(F.col("vec_id") % 150 == residue),
-            index_name="t_autocompact_idx",
-            compact_after_files=1,
-        )
-    path = _ivf_index_path(spark, "t_autocompact_idx")
-    per_cell = [
-        len(glob.glob(os.path.join(d, "*.parquet")))
-        for d in glob.glob(os.path.join(path, "cell_id=*"))
-    ]
-    assert per_cell and max(per_cell) == 1
-    assert ivf_index_verify(spark, "t_autocompact_idx")["consistent"]
-
-
-@pytest.mark.slow  # index mutation lifecycle (~6 s)
-def test_ivf_rebalance_auto_selects_grown_cells(spark, sf_dir):
-    """cells=None must pick exactly the cells whose current rows exceed
-    growth_threshold x their build-time count. Building on the even half
-    and appending the odd half roughly doubles every cell, so the default
-    2.0 threshold auto-selects a nonempty set; after the re-split the
-    index is fingerprint-consistent and still serves."""
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_cell_skew_audit,
-        ivf_index_append,
-        ivf_index_probe,
-        ivf_index_rebalance,
-        ivf_index_verify,
-    )
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    # even half keeps the %50==0 centroid ids, so centroids are unchanged
-    build_ivf_index(emb.where(F.col("vec_id") % 2 == 0), index_name="t_auto_idx")
-    ivf_index_append(emb.where(F.col("vec_id") % 2 == 1), index_name="t_auto_idx")
-    expected = sorted(
-        int(r["cell_id"])
-        for r in ivf_cell_skew_audit(spark, "t_auto_idx")
-        .where(F.col("growth") >= 2.0)
-        .collect()
-    )
-    assert expected, "the doubled index should have >=1 grown cell"
-    split = ivf_index_rebalance(spark, "t_auto_idx")
-    assert split == expected
-    assert ivf_index_verify(spark, "t_auto_idx")["consistent"]
-    q = emb.where(F.col("vec_id") < 10)
-    assert (
-        ivf_index_probe(
-            q, k=5, index_name="t_auto_idx", expected_corpus=emb
-        ).count()
-        > 0
-    )
+        query(spark, sf)
 
 
 def test_ivf_topk_curve_identical_to_per_nprobe_runs(spark, sf_dir):
@@ -734,1413 +450,3 @@ def test_ann_recall_report_matches_oracle_and_is_monotone(spark, sf_dir, duck):
     for method, (n_queries, hits, recall) in got.items():
         assert 0 <= hits <= n_queries * 5, method
         assert abs(recall - hits / (n_queries * 5.0)) < 1e-9, method
-
-
-@pytest.mark.slow  # stored-index lifecycle (~11 s)
-def test_ivf_rebalance_auto_selects_newborn_cells(spark, sf_dir):
-    """A cell with rows but NO build-time baseline (rows_at_build 0,
-    growth NULL — infinite) must be auto-selected by cells=None: the
-    review found `NULL >= threshold` silently dropped exactly the
-    fastest-growing cells. Simulated by erasing the hottest cell's
-    baseline row from __meta/cell_stats, the on-disk state a cell born
-    after build leaves behind."""
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        _ivf_index_path,
-        build_ivf_index,
-        ivf_cell_skew_audit,
-        ivf_index_probe,
-        ivf_index_rebalance,
-        ivf_index_verify,
-    )
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    build_ivf_index(emb, index_name="t_newborn_idx")
-    path = _ivf_index_path(spark, "t_newborn_idx")
-    stats_path = f"{path}__meta/cell_stats"
-    hot = int(
-        ivf_cell_skew_audit(spark, "t_newborn_idx")
-        .orderBy(F.col("rows_now").desc(), "cell_id")
-        .first()["cell_id"]
-    )
-    trimmed = (
-        spark.read.parquet(stats_path)
-        .where(F.col("cell_id") != hot)
-        .collect()
-    )
-    spark.createDataFrame(
-        trimmed, "cell_id long, rows_at_build long"
-    ).coalesce(1).write.mode("overwrite").parquet(stats_path)
-    audit = ivf_cell_skew_audit(spark, "t_newborn_idx").where(
-        F.col("cell_id") == hot
-    ).first()
-    assert audit["rows_at_build"] == 0 and audit["growth"] is None
-    # an impossible ratio threshold: ONLY the infinite-growth newborn
-    # cell can qualify
-    split = ivf_index_rebalance(
-        spark, "t_newborn_idx", growth_threshold=1e18
-    )
-    assert split == [hot]
-    assert ivf_index_verify(spark, "t_newborn_idx")["consistent"]
-    assert (
-        ivf_index_probe(
-            emb.where(F.col("vec_id") < 10), k=5, index_name="t_newborn_idx"
-        ).count()
-        > 0
-    )
-
-
-def test_ivf_rebalance_and_compact_hold_writer_lock(spark, sf_dir):
-    """Rebalance and compact derive rewritten cell contents from index
-    reads, so their WHOLE read-stage-swap span must hold the writer lock
-    (staging outside it would double or drop a concurrently-appended
-    batch): with the lock held by another writer, both must raise before
-    touching anything."""
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        ConcurrentIndexMutation,
-        _index_write_lock,
-        _ivf_index_path,
-        build_ivf_index,
-        ivf_index_compact,
-        ivf_index_rebalance,
-        ivf_index_verify,
-    )
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    build_ivf_index(emb, index_name="t_mutex_idx")
-    path = _ivf_index_path(spark, "t_mutex_idx")
-    with _index_write_lock(path):
-        with pytest.raises(ConcurrentIndexMutation):
-            ivf_index_rebalance(spark, "t_mutex_idx", cells=[0])
-        with pytest.raises(ConcurrentIndexMutation):
-            ivf_index_compact(spark, "t_mutex_idx", max_files_per_cell=0)
-    assert ivf_index_verify(spark, "t_mutex_idx")["consistent"]
-
-
-def test_ivf_append_raises_if_centroids_swapped_while_staging(spark, sf_dir):
-    """An append stages its assignment against the centroids it read
-    BEFORE taking the lock; if a rebalance swaps the centroid set in that
-    window, publishing would land rows in cells no live centroid names —
-    unreachable by probes yet counted by the fingerprint. The under-lock
-    centroid-token re-check must raise instead, leaving the index
-    untouched."""
-    import os
-
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-
-    emb = __import__(
-        "glue_job_to_write_structured_data_on_s3_full_code_spark.sources", fromlist=["read_table"]
-    ).read_table(spark, sf_dir, "embeddings")
-    sim.build_ivf_index(
-        emb.where(F.col("vec_id") % 50 != 17), index_name="t_swap_idx"
-    )
-    path = sim._ivf_index_path(spark, "t_swap_idx")
-    before = sim._read_fingerprint(path)
-
-    real = sim._centroid_token
-    calls = []
-
-    def drifting(spark_, path_):
-        calls.append(1)
-        tok = real(spark_, path_)
-        if len(calls) > 1:  # the under-lock re-check sees a swapped set
-            tok = {"rows": tok["rows"] + 1, "id_xor": tok["id_xor"] ^ 7}
-        return tok
-
-    sim._centroid_token = drifting
-    try:
-        with pytest.raises(sim.ConcurrentIndexMutation, match="centroid set"):
-            sim.ivf_index_append(
-                emb.where(F.col("vec_id") % 50 == 17), index_name="t_swap_idx"
-            )
-    finally:
-        sim._centroid_token = real
-    assert len(calls) == 2
-    assert sim._read_fingerprint(path) == before
-    assert sim.ivf_index_verify(spark, "t_swap_idx")["consistent"]
-    assert not os.path.exists(os.path.join(f"{path}__meta", "append.lock"))
-
-
-@pytest.mark.slow  # stored-index lifecycle (~10 s)
-def test_ivf_rebalance_large_cell_ids_do_not_wrap(spark):
-    """Rebalance installs member vec_ids as cell ids — on a 64-bit-id
-    corpus those exceed int32, and the audit/probe paths must carry them
-    without wrapping (the review found fixed int casts that truncated
-    above 2^31). Synthetic corpus: centroid-eligible small ids plus
-    2^31+k members that become sub-centroids."""
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_cell_skew_audit,
-        ivf_index_probe,
-        ivf_index_rebalance,
-        ivf_index_verify,
-    )
-
-    big = 2**31
-    rows = [(0, [1.0, 0.0, 0.05, 0.0]), (50, [0.0, 1.0, 0.0, 0.05])]
-    rows += [
-        (big + i, [1.0, 0.0, 0.01 * i, 0.0]) for i in range(1, 5)
-    ]  # near centroid 0 -> all live in cell 0
-    rows += [(big + 10 + i, [0.0, 1.0, 0.01 * i, 0.0]) for i in range(1, 3)]
-    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    build_ivf_index(corpus, index_name="t_bigid_idx")
-    split = ivf_index_rebalance(spark, "t_bigid_idx", cells=[0], factor=2)
-    assert split == [0]
-    cell_ids = {
-        int(r["cell_id"])
-        for r in ivf_cell_skew_audit(spark, "t_bigid_idx").collect()
-    }
-    # sub-centroids = the two smallest member ids of cell 0: its own
-    # centroid row 0 and the first big id — EXACT, not wrapped negative
-    assert cell_ids == {0, big + 1, 50}
-    assert all(c >= 0 for c in cell_ids)
-    assert ivf_index_verify(spark, "t_bigid_idx")["consistent"]
-    got = ivf_index_probe(
-        corpus.where(F.col("vec_id") == 0),
-        k=3,
-        nprobe=2,
-        index_name="t_bigid_idx",
-        expected_corpus=corpus,
-    ).collect()
-    # query 0 carries third component .05: nearest members of its cell
-    # by cosine are .04, .03, .02 — i.e. big+4, big+3, big+2
-    assert [r["neighbor_id"] for r in got] == [big + 4, big + 3, big + 2]
-
-
-def test_ivf_rebalance_swap_failure_keeps_a_live_centroid_copy(spark, sf_dir):
-    """If the meta swap's second rename fails, the previous centroids
-    must be RESTORED — the review found a window where no live copy
-    existed and cleanup then deleted the only new one, bricking every
-    later probe/append on the index."""
-    import os
-
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-
-    emb = __import__(
-        "glue_job_to_write_structured_data_on_s3_full_code_spark.sources", fromlist=["read_table"]
-    ).read_table(spark, sf_dir, "embeddings")
-    sim.build_ivf_index(emb, index_name="t_swapfail_idx")
-    path = sim._ivf_index_path(spark, "t_swapfail_idx")
-    live = os.path.join(f"{path}__meta", "centroids")
-    hot = int(
-        sim.ivf_cell_skew_audit(spark, "t_swapfail_idx")
-        .orderBy(F.col("rows_now").desc(), "cell_id")
-        .first()["cell_id"]
-    )
-
-    real_rename = os.rename
-
-    def failing(src, dst):
-        if dst == live and ".new" in src:
-            raise OSError("injected swap failure")
-        return real_rename(src, dst)
-
-    os.rename = failing
-    try:
-        with pytest.raises(OSError, match="injected swap failure"):
-            sim.ivf_index_rebalance(spark, "t_swapfail_idx", cells=[hot])
-    finally:
-        os.rename = real_rename
-    # the restore: a live centroids dir still exists and serves
-    assert os.path.isdir(live)
-    assert spark.read.parquet(live).count() > 0
-    # relayout never changes contents, so the fingerprint still verifies
-    assert sim.ivf_index_verify(spark, "t_swapfail_idx")["consistent"]
-
-
-@pytest.mark.slow  # index mutation lifecycle (~5 s)
-def test_ivf_rebalance_publish_failure_loses_no_rows(spark, sf_dir):
-    """A failure while renaming staged children into place must leave the
-    index byte-equivalent to before the call: the review confirmed the
-    previous delete-parents-first publish destroyed the split cells' rows
-    (parents gone, staging swept by the finally). Parents are now renamed
-    aside and restored on undo."""
-    import os
-
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    sim.build_ivf_index(emb, index_name="t_pubfail_idx")
-    path = sim._ivf_index_path(spark, "t_pubfail_idx")
-    rows_before = spark.read.parquet(path).count()
-    hot = int(
-        sim.ivf_cell_skew_audit(spark, "t_pubfail_idx")
-        .orderBy(F.col("rows_now").desc(), "cell_id")
-        .first()["cell_id"]
-    )
-    probe_before = sorted(
-        tuple(r)
-        for r in sim.ivf_index_probe(
-            emb.where(F.col("vec_id") < 10), k=5, index_name="t_pubfail_idx"
-        ).collect()
-    )
-
-    real_rename = os.rename
-
-    def failing(src, dst):
-        # fail the first staged-child part-file move (src under staging,
-        # dst inside a cell dir)
-        if "__staging_" in src and "cell_id=" in dst:
-            raise OSError("injected publish failure")
-        return real_rename(src, dst)
-
-    os.rename = failing
-    try:
-        with pytest.raises(OSError, match="injected publish failure"):
-            sim.ivf_index_rebalance(spark, "t_pubfail_idx", cells=[hot])
-    finally:
-        os.rename = real_rename
-
-    assert spark.read.parquet(path).count() == rows_before
-    v = sim.ivf_index_verify(spark, "t_pubfail_idx")
-    assert v["consistent"] and v["orphan_cells"] == []
-    probe_after = sorted(
-        tuple(r)
-        for r in sim.ivf_index_probe(
-            emb.where(F.col("vec_id") < 10), k=5, index_name="t_pubfail_idx"
-        ).collect()
-    )
-    assert probe_after == probe_before
-    # no hidden .old parent dirs left behind
-    assert not [d for d in os.listdir(path) if d.endswith(".old")]
-
-
-@pytest.mark.slow  # index mutation lifecycle (~4 s)
-def test_ivf_compact_failure_loses_no_rows(spark, sf_dir):
-    """A failure while swapping a cell's compacted files in must leave the
-    cell intact: the review confirmed the previous unlink-originals-first
-    swap destroyed the cell's rows on a mid-swap exception."""
-    import glob
-    import os
-
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    sim.build_ivf_index(
-        emb.where(F.col("vec_id") % 50 != 17), index_name="t_cmpfail_idx"
-    )
-    sim.ivf_index_append(
-        emb.where(F.col("vec_id") % 50 == 17), index_name="t_cmpfail_idx"
-    )
-    path = sim._ivf_index_path(spark, "t_cmpfail_idx")
-    rows_before = spark.read.parquet(path).count()
-
-    real_rename = os.rename
-
-    def failing(src, dst):
-        if "__staging_" in src and dst.endswith(".parquet"):
-            raise OSError("injected compact failure")
-        return real_rename(src, dst)
-
-    os.rename = failing
-    try:
-        with pytest.raises(OSError, match="injected compact failure"):
-            sim.ivf_index_compact(spark, "t_cmpfail_idx", max_files_per_cell=1)
-    finally:
-        os.rename = real_rename
-
-    assert spark.read.parquet(path).count() == rows_before
-    assert sim.ivf_index_verify(spark, "t_cmpfail_idx")["consistent"]
-    # no hidden .old part files left behind in any cell
-    assert not glob.glob(os.path.join(path, "cell_id=*", ".*.old"))
-    # and the retry succeeds normally
-    assert sim.ivf_index_compact(spark, "t_cmpfail_idx", max_files_per_cell=1)
-
-
-@pytest.mark.slow  # index mutation lifecycle (~5 s)
-def test_ivf_append_idempotency_token_skips_replay(spark, sf_dir):
-    """At-least-once delivery: re-appending the SAME batch with the same
-    token must be a no-op — the XOR fingerprint alone cannot catch the
-    replay (duplicate ids XOR-cancel to an apparently-consistent value),
-    which is exactly how the double-append would corrupt silently."""
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    sim.build_ivf_index(
-        emb.where(F.col("vec_id") % 50 != 17), index_name="t_token_idx"
-    )
-    path = sim._ivf_index_path(spark, "t_token_idx")
-    batch = emb.where(F.col("vec_id") % 150 == 17)
-    sim.ivf_index_append(batch, index_name="t_token_idx", idempotency_token="b0")
-    rows = spark.read.parquet(path).count()
-    fp = sim._read_fingerprint(path)
-    assert fp["last_token"] == "b0"
-    # replay: same token -> skipped entirely
-    sim.ivf_index_append(batch, index_name="t_token_idx", idempotency_token="b0")
-    assert spark.read.parquet(path).count() == rows
-    assert sim._read_fingerprint(path) == fp
-    # next batch with a new token applies
-    batch2 = emb.where(F.col("vec_id") % 150 == 67)
-    n2 = batch2.count()
-    sim.ivf_index_append(batch2, index_name="t_token_idx", idempotency_token="b1")
-    assert spark.read.parquet(path).count() == rows + n2
-    assert sim._read_fingerprint(path)["last_token"] == "b1"
-    # the token never leaks into identity comparisons: probe still verifies
-    assert (
-        sim.ivf_index_probe(
-            emb.where(F.col("vec_id") < 10),
-            k=5,
-            index_name="t_token_idx",
-            expected_corpus=emb.where(
-                (F.col("vec_id") % 50 != 17)
-                | (F.col("vec_id") % 150 == 17)
-                | (F.col("vec_id") % 150 == 67)
-            ),
-        ).count()
-        > 0
-    )
-
-
-def test_ivf_build_respects_writer_lock(spark, sf_dir):
-    """A rebuild overwrites cells, centroids, stats, and fingerprint —
-    racing it against another mutation interleaves renames with the
-    overwrite, so build must honor the same single-writer lock."""
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    sim.build_ivf_index(emb, index_name="t_buildlock_idx")
-    path = sim._ivf_index_path(spark, "t_buildlock_idx")
-    with sim._index_write_lock(path):
-        with pytest.raises(sim.ConcurrentIndexMutation):
-            sim.build_ivf_index(emb, index_name="t_buildlock_idx")
-    assert sim.ivf_index_verify(spark, "t_buildlock_idx")["consistent"]
-
-
-def test_ivf_verify_flags_orphan_cells(spark, sf_dir):
-    """The count+XOR fingerprint is layout-insensitive: a cell directory
-    no live centroid names holds rows no probe can reach, yet the
-    fingerprint stays clean — verify's reachability check must flag it."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    sim.build_ivf_index(emb, index_name="t_orphan_idx")
-    path = sim._ivf_index_path(spark, "t_orphan_idx")
-    assert sim.ivf_index_verify(spark, "t_orphan_idx")["consistent"]
-    # simulate the crash-between-swaps state: rows present under a cell
-    # id the centroid set does not name
-    cells = [d for d in os.listdir(path) if d.startswith("cell_id=")]
-    victim = os.path.join(path, sorted(cells)[0])
-    orphan_id = 10**9 + 7
-    os.rename(victim, os.path.join(path, f"cell_id={orphan_id}"))
-    v = sim.ivf_index_verify(spark, "t_orphan_idx")
-    assert v["orphan_cells"] == [orphan_id]
-    assert not v["consistent"]
-
-
-@pytest.mark.slow  # index mutation lifecycle (~4 s)
-def test_ivf_rebuild_carries_idempotency_token_forward(spark, sf_dir):
-    """The documented repair flow rebuilds from the FULL current corpus —
-    which already holds every tokened batch. A rebuild that dropped the
-    stored token would re-open the replay window: the replayed batch
-    would re-append rows the rebuild already contains, and the XOR
-    fingerprint cannot see duplicates (ids cancel). The rebuild must
-    carry the token forward so post-repair replays stay no-ops."""
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.where(F.col("vec_id") % 50 != 17)
-    batch = emb.where(F.col("vec_id") % 50 == 17)
-    sim.build_ivf_index(base, index_name="t_rebuild_tok_idx")
-    sim.ivf_index_append(
-        batch, index_name="t_rebuild_tok_idx", idempotency_token="b7"
-    )
-    path = sim._ivf_index_path(spark, "t_rebuild_tok_idx")
-    # repair: rebuild from the FULL corpus (base ∪ batch)
-    sim.build_ivf_index(emb, index_name="t_rebuild_tok_idx")
-    assert sim._read_fingerprint(path)["last_token"] == "b7"
-    rows = spark.read.parquet(path).count()
-    # the stream replays the uncommitted batch after the repair
-    sim.ivf_index_append(
-        batch, index_name="t_rebuild_tok_idx", idempotency_token="b7"
-    )
-    assert spark.read.parquet(path).count() == rows
-    assert sim.ivf_index_verify(spark, "t_rebuild_tok_idx")["consistent"]
-
-
-def test_ivf_append_replay_fast_path_runs_no_assignment(spark, sf_dir):
-    """A replayed delivery must be discarded BEFORE the batch-sized
-    assignment and staged parquet write — the whole point of exactly-once
-    is that replays are near-free, not full Spark jobs swept at the
-    locked check."""
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    sim.build_ivf_index(
-        emb.where(F.col("vec_id") % 50 != 17), index_name="t_fastpath_idx"
-    )
-    batch = emb.where(F.col("vec_id") % 50 == 17)
-    sim.ivf_index_append(
-        batch, index_name="t_fastpath_idx", idempotency_token="b0"
-    )
-
-    real = sim._ivf_assign
-
-    def forbidden(*a, **k):
-        raise AssertionError("replay ran the assignment job")
-
-    sim._ivf_assign = forbidden
-    try:
-        sim.ivf_index_append(
-            batch, index_name="t_fastpath_idx", idempotency_token="b0"
-        )
-    finally:
-        sim._ivf_assign = real
-    assert sim.ivf_index_verify(spark, "t_fastpath_idx")["consistent"]
-
-
-def test_ivf_verify_flags_stale_asides(spark, sf_dir):
-    """Crash residue: the hidden `.…old` copies rebalance/compact rename
-    originals to are invisible to the fingerprint scan AND the orphan
-    check (Spark ignores dot-files), so verify must surface them — they
-    hold duplicate data forever and block a later rebalance of a reused
-    cell id."""
-    import os
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    sim.build_ivf_index(emb, index_name="t_aside_idx")
-    path = sim._ivf_index_path(spark, "t_aside_idx")
-    assert sim.ivf_index_verify(spark, "t_aside_idx")["consistent"]
-    os.makedirs(os.path.join(path, ".cell_id=0.old"))
-    v = sim.ivf_index_verify(spark, "t_aside_idx")
-    assert v["stale_asides"] == [".cell_id=0.old"]
-    assert not v["consistent"]
-
-
-@pytest.mark.slow  # index mutation lifecycle (~5 s)
-def test_ivf_fresh_build_after_data_dir_delete_drops_token(spark, sf_dir):
-    """The discard-the-token escape hatch: rebuilding from a corpus that
-    does NOT include the tokened batch requires deleting the index DATA
-    dir first. The rebuild detection must key off the data dir — the
-    sibling __meta dir survives the delete, and carrying its token
-    forward would make the re-delivered (now REAL) batch silently
-    dropped as a phantom duplicate."""
-    import shutil
-
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.where(F.col("vec_id") % 50 != 17)
-    batch = emb.where(F.col("vec_id") % 50 == 17)
-    n_batch = batch.count()
-    sim.build_ivf_index(base, index_name="t_fresh_tok_idx")
-    sim.ivf_index_append(
-        batch, index_name="t_fresh_tok_idx", idempotency_token="b9"
-    )
-    path = sim._ivf_index_path(spark, "t_fresh_tok_idx")
-    # upstream rolled the batch back: operator deletes the DATA dir and
-    # rebuilds from base only (__meta survives, as it would in practice)
-    shutil.rmtree(path)
-    sim.build_ivf_index(base, index_name="t_fresh_tok_idx")
-    assert "last_token" not in sim._read_fingerprint(path)
-    rows = spark.read.parquet(path).count()
-    # the batch is re-delivered and is REAL now — it must apply
-    sim.ivf_index_append(
-        batch, index_name="t_fresh_tok_idx", idempotency_token="b9"
-    )
-    assert spark.read.parquet(path).count() == rows + n_batch
-    assert sim.ivf_index_verify(spark, "t_fresh_tok_idx")["consistent"]
-
-
-def test_ivf_rebalance_refuses_stale_aside(spark, sf_dir):
-    """A stale aside can hold the ONLY copy of a cell's rows (crash right
-    after the rename-aside): rebalance must refuse loudly — deleting it
-    would be silent permanent data loss, and a bare ENOTEMPTY points at
-    nothing."""
-    import os
-
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    sim.build_ivf_index(emb, index_name="t_staleaside_idx")
-    path = sim._ivf_index_path(spark, "t_staleaside_idx")
-    hot = int(
-        sim.ivf_cell_skew_audit(spark, "t_staleaside_idx")
-        .orderBy(F.col("rows_now").desc(), "cell_id")
-        .first()["cell_id"]
-    )
-    marker = os.path.join(path, f".cell_id={hot}.old")
-    os.makedirs(marker)
-    with open(os.path.join(marker, "residue"), "w") as fh:
-        fh.write("x")
-    with pytest.raises(RuntimeError, match="stale aside"):
-        sim.ivf_index_rebalance(spark, "t_staleaside_idx", cells=[hot])
-    # the residue is untouched and the index data is intact
-    assert os.path.exists(os.path.join(marker, "residue"))
-    v = sim.ivf_index_verify(spark, "t_staleaside_idx")
-    assert v["stale_asides"] and not v["consistent"]
-    os.remove(os.path.join(marker, "residue"))
-    os.rmdir(marker)
-    assert sim.ivf_index_verify(spark, "t_staleaside_idx")["consistent"]
-
-
-def test_fp_cache_invalidated_by_index_mutations(spark, sf_dir, tmp_path):
-    """The probe's fingerprint memo is keyed by corpus-plan semantic hash,
-    which cannot see file-level growth behind the same plan. An append is
-    the in-module signal that the corpus is moving, so it must drop the
-    session's memo: the canonical append workflow — batch lands in BOTH
-    the corpus dir and the index — would otherwise fail its next probe
-    against a pre-append cached fingerprint (spurious mismatch)."""
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    corpus_dir = str(tmp_path / "corpus")
-    emb.where(F.col("vec_id") % 50 != 17).write.parquet(corpus_dir)
-    corpus = spark.read.parquet(corpus_dir)
-    q = emb.where(F.col("vec_id") < 10)
-    sim.build_ivf_index(corpus, index_name="t_inval_idx")
-    assert (
-        sim.ivf_index_probe(
-            q, k=5, index_name="t_inval_idx", expected_corpus=corpus
-        ).count()
-        > 0
-    )  # memoizes fp(base) for this corpus plan
-    batch = emb.where(F.col("vec_id") % 50 == 17)
-    batch.write.mode("append").parquet(corpus_dir)  # corpus dir grows...
-    sim.ivf_index_append(batch, index_name="t_inval_idx")  # ...and the index
-    # same path → same plan semantic hash as the memoized entry; the probe
-    # must verify against a FRESH fingerprint (base ∪ batch), not the
-    # pre-append memo — a stale memo would raise a spurious mismatch here
-    assert (
-        sim.ivf_index_probe(
-            q,
-            k=5,
-            index_name="t_inval_idx",
-            expected_corpus=spark.read.parquet(corpus_dir),
-        ).count()
-        > 0
-    )
-
-
-def test_probe_verify_fresh_detects_external_corpus_growth(spark, sf_dir, tmp_path):
-    """Corpus files that grow OUTSIDE any index mutation are invisible to
-    both the plan-hash memo and any in-module invalidation hook: the
-    default (memoized) probe keeps passing against the stale fingerprint —
-    the documented immutability assumption — and ``verify_fresh=True`` is
-    the remedy, recomputing the fingerprint and refusing the drifted
-    corpus. The fresh value also REPLACES the memo entry, so subsequent
-    default probes refuse too."""
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    corpus_dir = str(tmp_path / "corpus")
-    emb.where(F.col("vec_id") % 50 != 17).write.parquet(corpus_dir)
-    q = emb.where(F.col("vec_id") < 10)
-    sim.build_ivf_index(spark.read.parquet(corpus_dir), index_name="t_fresh_idx")
-    assert (
-        sim.ivf_index_probe(
-            q,
-            k=5,
-            index_name="t_fresh_idx",
-            expected_corpus=spark.read.parquet(corpus_dir),
-        ).count()
-        > 0
-    )  # memoizes fp(base)
-    # the dir grows with NO index mutation: the memoized probe cannot see it
-    emb.where(F.col("vec_id") % 50 == 17).write.mode("append").parquet(corpus_dir)
-    grown = spark.read.parquet(corpus_dir)
-    assert (
-        sim.ivf_index_probe(
-            q, k=5, index_name="t_fresh_idx", expected_corpus=grown
-        ).count()
-        > 0
-    )  # documented hazard: stale memo still matches the stored fp
-    with pytest.raises(ValueError, match="does not match the corpus"):
-        sim.ivf_index_probe(
-            q,
-            k=5,
-            index_name="t_fresh_idx",
-            expected_corpus=grown,
-            verify_fresh=True,
-        ).count()
-    # the fresh recompute replaced the memo entry: default probes now refuse
-    with pytest.raises(ValueError, match="does not match the corpus"):
-        sim.ivf_index_probe(
-            q, k=5, index_name="t_fresh_idx", expected_corpus=grown
-        ).count()
-
-
-@pytest.mark.slow  # crash-injection lifecycle test (slow tier)
-def test_ivf_append_token_out_of_order_replay_limitation(spark, sf_dir):
-    """Pins the documented ORDERING ASSUMPTION of the idempotency token:
-    only the most recent token is remembered, so re-delivering an OLDER
-    batch after a newer one landed re-appends it (rows double, and the
-    XOR fingerprint cannot see it — duplicate ids cancel). Structured
-    Streaming's foreachBatch never does this; a hand-rolled caller with
-    out-of-order producers must not rely on the token as a dedup log."""
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.where(F.col("vec_id") % 50 != 17)
-    b0 = emb.where(F.col("vec_id") % 150 == 17)
-    b1 = emb.where(F.col("vec_id") % 150 == 67)
-    sim.build_ivf_index(base, index_name="t_ooo_idx")
-    path = sim._ivf_index_path(spark, "t_ooo_idx")
-    sim.ivf_index_append(b0, index_name="t_ooo_idx", idempotency_token="cp:b0")
-    sim.ivf_index_append(b1, index_name="t_ooo_idx", idempotency_token="cp:b1")
-    n_after_both = spark.read.parquet(path).count()
-    fp_after_both = sim._read_fingerprint(path)
-    # out-of-order replay of the OLDER batch: NOT detected — re-appends
-    sim.ivf_index_append(b0, index_name="t_ooo_idx", idempotency_token="cp:b0")
-    assert spark.read.parquet(path).count() == n_after_both + b0.count()
-    fp = sim._read_fingerprint(path)
-    assert fp["last_token"] == "cp:b0"
-    # the duplicate ids XOR-cancel: identity hash reverts to the pre-b0
-    # value even though the rows are physically duplicated — exactly why
-    # the fingerprint alone can never stand in for ordered delivery
-    assert fp["id_xor"] == fp_after_both["id_xor"] ^ sim._corpus_fingerprint(
-        b0, "vec_id"
-    )["id_xor"]
-
-
-import contextlib
-
-
-@contextlib.contextmanager
-def _dead_process_at(trigger):
-    """Freeze the filesystem at a kill point: the os.rename call for which
-    ``trigger(src, dst)`` returns True raises, and every LATER
-    rename/unlink/rmtree becomes a no-op — so the mutation's undo handlers
-    and finally-sweeps leave the exact at-kill state behind, like a killed
-    process would (including the leftover writer lock file)."""
-    import os
-    import shutil
-
-    real_rename, real_unlink, real_rmtree = os.rename, os.unlink, shutil.rmtree
-    state = {"dead": False}
-
-    def rename(src, dst, **kw):
-        if state["dead"]:
-            return
-        if trigger(str(src), str(dst)):
-            state["dead"] = True
-            raise OSError("simulated process kill")
-        return real_rename(src, dst, **kw)
-
-    def unlink(p, **kw):
-        if state["dead"]:
-            return
-        return real_unlink(p, **kw)
-
-    def rmtree(p, *a, **kw):
-        if state["dead"]:
-            return
-        return real_rmtree(p, *a, **kw)
-
-    os.rename, os.unlink, shutil.rmtree = rename, unlink, rmtree
-    try:
-        yield state
-    finally:
-        os.rename, os.unlink, shutil.rmtree = real_rename, real_unlink, real_rmtree
-
-
-@pytest.mark.slow  # crash-injection lifecycle test (slow tier)
-def test_ivf_repair_rolls_back_rebalance_killed_before_publish(spark, sf_dir):
-    """The r8 verdict's crash window: a rebalance killed AFTER the parents
-    were renamed aside and the children landed but BEFORE the centroid
-    swap (the publish point). Probes would silently miss the split cells'
-    rows; repair must roll the rebalance back — restore parents, drop the
-    duplicate children — and the post-repair probe must be row-identical
-    to the pre-crash index."""
-    import os
-
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    sim.build_ivf_index(emb, index_name="t_repair_rb_idx")
-    path = sim._ivf_index_path(spark, "t_repair_rb_idx")
-    # a healthy index repairs to a no-op
-    rep0 = sim.ivf_index_repair(spark, "t_repair_rb_idx")
-    assert rep0["consistent"] and rep0["actions"] == []
-    probe_before = sorted(
-        tuple(r)
-        for r in sim.ivf_index_probe(
-            q, k=5, index_name="t_repair_rb_idx", expected_corpus=emb
-        ).collect()
-    )
-    hot = int(
-        sim.ivf_cell_skew_audit(spark, "t_repair_rb_idx")
-        .orderBy(F.col("rows_now").desc(), "cell_id")
-        .first()["cell_id"]
-    )
-    with _dead_process_at(lambda s, d: d.endswith("centroids.old")):
-        with pytest.raises(OSError, match="simulated process kill"):
-            sim.ivf_index_rebalance(spark, "t_repair_rb_idx", cells=[hot])
-    # at-kill state: writer lock left behind, parents hidden, children live
-    assert os.path.exists(os.path.join(f"{path}__meta", "append.lock"))
-    v = sim.ivf_index_verify(spark, "t_repair_rb_idx")
-    assert not v["consistent"] and v["stale_asides"]
-    # the leftover lock blocks repair unless the caller confirms the
-    # writer is dead
-    with pytest.raises(sim.ConcurrentIndexMutation):
-        sim.ivf_index_repair(spark, "t_repair_rb_idx")
-    rep = sim.ivf_index_repair(spark, "t_repair_rb_idx", break_lock=True)
-    assert rep["consistent"] and rep["actions"]
-    probe_after = sorted(
-        tuple(r)
-        for r in sim.ivf_index_probe(
-            q, k=5, index_name="t_repair_rb_idx", expected_corpus=emb
-        ).collect()
-    )
-    assert probe_after == probe_before
-    # no residue: asides, orphans, staged meta dirs, staging dirs all gone
-    assert not [d for d in os.listdir(path) if d.endswith(".old")]
-    import glob as _glob
-
-    assert not _glob.glob(f"{path}__staging_*")
-    assert not _glob.glob(os.path.join(f"{path}__meta", ".*.new"))
-    # and the rebalance itself now runs cleanly end to end
-    assert sim.ivf_index_rebalance(spark, "t_repair_rb_idx", cells=[hot]) == [hot]
-    assert sim.ivf_index_verify(spark, "t_repair_rb_idx")["consistent"]
-
-
-@pytest.mark.slow  # crash-injection lifecycle test (slow tier)
-def test_ivf_repair_rolls_crashed_append_forward(spark, sf_dir):
-    """An append killed mid-publish (some staged part files moved in, the
-    fingerprint not yet advanced): the write-ahead manifest lets repair
-    complete the moves and advance the fingerprint+token exactly once —
-    and the token makes the producer's replay of the same batch a no-op
-    afterwards."""
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    base = emb.where(F.col("vec_id") % 50 != 17)
-    batch = emb.where(F.col("vec_id") % 50 == 17)
-    sim.build_ivf_index(base, index_name="t_repair_ap_idx")
-    path = sim._ivf_index_path(spark, "t_repair_ap_idx")
-
-    calls = {"n": 0}
-
-    def trig(src, dst):
-        if "__staging_" in src and "cell_id=" in dst and dst.endswith(".parquet"):
-            calls["n"] += 1
-            return calls["n"] == 2  # first part file lands, kill on the 2nd
-        return False
-
-    with _dead_process_at(trig):
-        with pytest.raises(OSError, match="simulated process kill"):
-            sim.ivf_index_append(
-                batch, index_name="t_repair_ap_idx", idempotency_token="cp:b7"
-            )
-    assert not sim.ivf_index_verify(spark, "t_repair_ap_idx")["consistent"]
-    rep = sim.ivf_index_repair(spark, "t_repair_ap_idx", break_lock=True)
-    assert rep["consistent"]
-    assert any("rolled crashed append forward" in a for a in rep["actions"])
-    fp = sim._read_fingerprint(path)
-    assert fp["last_token"] == "cp:b7"
-    # the repaired index answers exactly like the in-memory IVF over the
-    # full corpus (same contract as a clean append)
-    got = sorted(
-        tuple(r)
-        for r in sim.ivf_index_probe(
-            q, k=5, index_name="t_repair_ap_idx", expected_corpus=emb
-        ).collect()
-    )
-    want = sorted(tuple(r) for r in sim.ivf_topk(emb, q, k=5).collect())
-    assert got == want and len(got) > 0
-    # replay of the recovered batch: detected by the token, no-op
-    rows = spark.read.parquet(path).count()
-    sim.ivf_index_append(
-        batch, index_name="t_repair_ap_idx", idempotency_token="cp:b7"
-    )
-    assert spark.read.parquet(path).count() == rows
-
-
-@pytest.mark.slow  # crash-injection lifecycle test (slow tier)
-def test_ivf_repair_restores_compaction_killed_during_landing(spark, sf_dir):
-    """A compaction killed after hiding every original and landing only
-    part of the rewrite: the landed files' rows are all contained in the
-    asides, so repair drops them and restores the originals — the cell is
-    byte-equivalent to before the compaction."""
-    import glob
-    import os
-
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    sim.build_ivf_index(
-        emb.where(F.col("vec_id") % 50 != 17), index_name="t_repair_cp_idx"
-    )
-    sim.ivf_index_append(
-        emb.where(F.col("vec_id") % 50 == 17), index_name="t_repair_cp_idx"
-    )
-    path = sim._ivf_index_path(spark, "t_repair_cp_idx")
-    rows_before = spark.read.parquet(path).count()
-    files_before = sorted(glob.glob(os.path.join(path, "cell_id=*", "*.parquet")))
-
-    landed = {"n": 0}
-
-    def trig(src, dst):
-        # staged rewrite files land as staging/part -> cell_dir/part
-        if "__staging_" in src and dst.endswith(".parquet"):
-            landed["n"] += 1
-            return landed["n"] == 2
-        return False
-
-    with _dead_process_at(trig):
-        with pytest.raises(OSError, match="simulated process kill"):
-            # tiny target size forces a multi-file rewrite so the kill
-            # lands strictly between the first and last staged move
-            sim.ivf_index_compact(
-                spark,
-                "t_repair_cp_idx",
-                max_files_per_cell=1,
-                target_file_bytes=4096,
-            )
-    v = sim.ivf_index_verify(spark, "t_repair_cp_idx")
-    assert v["stale_asides"] and not v["consistent"]
-    rep = sim.ivf_index_repair(spark, "t_repair_cp_idx", break_lock=True)
-    assert rep["consistent"]
-    assert any("restored" in a and "pre-compaction" in a for a in rep["actions"])
-    assert spark.read.parquet(path).count() == rows_before
-    assert (
-        sorted(glob.glob(os.path.join(path, "cell_id=*", "*.parquet")))
-        == files_before
-    )
-    # retry compacts cleanly
-    assert sim.ivf_index_compact(spark, "t_repair_cp_idx", max_files_per_cell=1)
-    assert sim.ivf_index_verify(spark, "t_repair_cp_idx")["consistent"]
-
-
-@pytest.mark.slow  # crash-injection lifecycle test (slow tier)
-def test_ivf_repair_restores_compaction_killed_during_hiding(spark, sf_dir):
-    """A compaction killed while hiding originals (no rewrite landed yet):
-    the live files are the not-yet-hidden originals — disjoint from the
-    asides — so repair keeps them and restores the hidden ones alongside."""
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    sim.build_ivf_index(
-        emb.where(F.col("vec_id") % 50 != 17), index_name="t_repair_ch_idx"
-    )
-    sim.ivf_index_append(
-        emb.where(F.col("vec_id") % 50 == 17), index_name="t_repair_ch_idx"
-    )
-    path = sim._ivf_index_path(spark, "t_repair_ch_idx")
-    rows_before = spark.read.parquet(path).count()
-
-    hidden = {"n": 0}
-
-    def trig(src, dst):
-        # originals hide as cell_dir/part -> cell_dir/.part.old
-        if src.endswith(".parquet") and dst.endswith(".old"):
-            hidden["n"] += 1
-            return hidden["n"] == 2
-        return False
-
-    with _dead_process_at(trig):
-        with pytest.raises(OSError, match="simulated process kill"):
-            sim.ivf_index_compact(spark, "t_repair_ch_idx", max_files_per_cell=1)
-    rep = sim.ivf_index_repair(spark, "t_repair_ch_idx", break_lock=True)
-    assert rep["consistent"]
-    assert spark.read.parquet(path).count() == rows_before
-    assert sim.ivf_index_compact(spark, "t_repair_ch_idx", max_files_per_cell=1)
-
-
-@pytest.mark.slow  # crash-injection lifecycle test (slow tier)
-def test_ivf_repair_is_itself_crash_recoverable(spark, sf_dir):
-    """Repair stages compaction asides into a visible temp dir to read
-    them; a repair killed mid-span must not strand (or worse, delete) the
-    only copy of those rows. The marker file lets the NEXT repair move
-    them back and finish the job."""
-    import glob
-    import os
-
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    sim.build_ivf_index(
-        emb.where(F.col("vec_id") % 50 != 17), index_name="t_repair_rr_idx"
-    )
-    sim.ivf_index_append(
-        emb.where(F.col("vec_id") % 50 == 17), index_name="t_repair_rr_idx"
-    )
-    path = sim._ivf_index_path(spark, "t_repair_rr_idx")
-    rows_before = spark.read.parquet(path).count()
-
-    # first crash, constructed deterministically: a compaction killed
-    # after hiding ALL of one cell's originals and landing nothing —
-    # pick the cell with the most part files (an append-touched cell has
-    # >=2) and hide them exactly as _compact_cells_locked would
-    cells = sorted(glob.glob(os.path.join(path, "cell_id=*")))
-    cell_dir = max(
-        cells, key=lambda d: len(glob.glob(os.path.join(d, "*.parquet")))
-    )
-    parts = glob.glob(os.path.join(cell_dir, "*.parquet"))
-    assert len(parts) >= 2
-    for p in parts:
-        os.rename(p, os.path.join(cell_dir, f".{os.path.basename(p)}.old"))
-    assert not sim.ivf_index_verify(spark, "t_repair_rr_idx")["consistent"]
-
-    # second crash: the REPAIR dies after staging one aside into its temp
-    # dir (src .old -> visible name under __repair_) — stranding the only
-    # copy of that file's rows outside the index
-    staged = {"n": 0}
-
-    def trig_repair(src, dst):
-        if src.endswith(".old") and "__repair_" in dst:
-            staged["n"] += 1
-            return staged["n"] == 2
-        return False
-
-    with _dead_process_at(trig_repair):
-        with pytest.raises(OSError, match="simulated process kill"):
-            sim.ivf_index_repair(spark, "t_repair_rr_idx")
-    leftover = glob.glob(f"{path}__repair_*")
-    assert leftover and os.path.isfile(os.path.join(leftover[0], ".cell_dir"))
-
-    # the next repair recovers the stranded aside and restores consistency
-    rep = sim.ivf_index_repair(spark, "t_repair_rr_idx", break_lock=True)
-    assert rep["consistent"]
-    assert any("crashed earlier repair" in a for a in rep["actions"])
-    assert not glob.glob(f"{path}__repair_*")
-    assert spark.read.parquet(path).count() == rows_before
-
-
-@pytest.mark.slow  # crash-injection lifecycle test (slow tier)
-def test_ivf_repair_completes_published_rebalance(spark, sf_dir):
-    """A rebalance killed BETWEEN the two meta swaps (centroids refined,
-    cell_stats still naming the split parents): the publish point passed,
-    so the children are canonical — repair must DISCARD the duplicate
-    parent asides and roll the staged cell_stats forward, leaving the
-    index identical to a rebalance that finished cleanly (compared
-    against a twin index rebalanced without a crash)."""
-    import os
-
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    sim.build_ivf_index(emb, index_name="t_pubkill_idx")
-    sim.build_ivf_index(emb, index_name="t_pubkill_twin")
-    hot = int(
-        sim.ivf_cell_skew_audit(spark, "t_pubkill_idx")
-        .orderBy(F.col("rows_now").desc(), "cell_id")
-        .first()["cell_id"]
-    )
-    with _dead_process_at(lambda s, d: d.endswith("cell_stats.old")):
-        with pytest.raises(OSError, match="simulated process kill"):
-            sim.ivf_index_rebalance(spark, "t_pubkill_idx", cells=[hot])
-    rep = sim.ivf_index_repair(spark, "t_pubkill_idx", break_lock=True)
-    assert rep["consistent"]
-    assert any("published rebalance" in a for a in rep["actions"])
-    assert any("cell_stats" in a for a in rep["actions"])
-    # identical to the crash-free twin: same probe rows, same stats
-    assert sim.ivf_index_rebalance(spark, "t_pubkill_twin", cells=[hot]) == [hot]
-    got = sorted(
-        tuple(r)
-        for r in sim.ivf_index_probe(
-            q, k=5, index_name="t_pubkill_idx", expected_corpus=emb
-        ).collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in sim.ivf_index_probe(
-            q, k=5, index_name="t_pubkill_twin", expected_corpus=emb
-        ).collect()
-    )
-    assert got == want and len(got) > 0
-    stats = lambda name: sorted(  # noqa: E731
-        tuple(r)
-        for r in spark.read.parquet(
-            f"{sim._ivf_index_path(spark, name)}__meta/cell_stats"
-        ).collect()
-    )
-    assert stats("t_pubkill_idx") == stats("t_pubkill_twin")
-
-
-@pytest.mark.slow  # crash-injection lifecycle test (slow tier)
-def test_ivf_repair_discards_staging_against_superseded_centroids(spark, sf_dir):
-    """An append killed before any part file moved, then a rebalance
-    refines the centroid set: the staged assignment is stale (its cell
-    ids target the pre-split layout), so repair must discard it — the
-    batch is re-delivered and assigned against the refined centroids."""
-    import os
-
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.where(F.col("vec_id") % 50 != 17)
-    batch = emb.where(F.col("vec_id") % 50 == 17)
-    sim.build_ivf_index(base, index_name="t_stale_stage_idx")
-    path = sim._ivf_index_path(spark, "t_stale_stage_idx")
-    base_rows = spark.read.parquet(path).count()
-
-    def trig(src, dst):
-        return "__staging_" in src and "cell_id=" in dst and dst.endswith(".parquet")
-
-    with _dead_process_at(trig):
-        with pytest.raises(OSError, match="simulated process kill"):
-            sim.ivf_index_append(
-                batch, index_name="t_stale_stage_idx", idempotency_token="cp:b3"
-            )
-    # the dead writer's lock is confirmed abandoned; a rebalance then
-    # refines the centroid set before anyone repairs
-    os.unlink(os.path.join(f"{path}__meta", "append.lock"))
-    hot = int(
-        sim.ivf_cell_skew_audit(spark, "t_stale_stage_idx")
-        .orderBy(F.col("rows_now").desc(), "cell_id")
-        .first()["cell_id"]
-    )
-    assert sim.ivf_index_rebalance(spark, "t_stale_stage_idx", cells=[hot]) == [hot]
-    rep = sim.ivf_index_repair(spark, "t_stale_stage_idx")
-    assert rep["consistent"]
-    assert any("superseded centroid set" in a for a in rep["actions"])
-    # nothing from the stale staging leaked in; token NOT recorded
-    assert spark.read.parquet(path).count() == base_rows
-    assert "last_token" not in sim._read_fingerprint(path)
-    # re-delivery assigns against the refined centroids and applies
-    sim.ivf_index_append(
-        batch, index_name="t_stale_stage_idx", idempotency_token="cp:b3"
-    )
-    assert spark.read.parquet(path).count() == base_rows + batch.count()
-    assert sim.ivf_index_verify(spark, "t_stale_stage_idx")["consistent"]
-
-
-def test_ivf_repair_discards_staging_of_applied_batch(spark, sf_dir):
-    """An append killed after its fingerprint write but before the staging
-    sweep: the stored token equals the manifest token, so repair discards
-    the staging instead of double-applying the batch."""
-    import glob
-    import os
-    import shutil
-
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.where(F.col("vec_id") % 50 != 17)
-    batch = emb.where(F.col("vec_id") % 150 == 17)
-    sim.build_ivf_index(base, index_name="t_applied_idx")
-    path = sim._ivf_index_path(spark, "t_applied_idx")
-    sim.ivf_index_append(
-        batch, index_name="t_applied_idx", idempotency_token="cp:b5"
-    )
-    rows = spark.read.parquet(path).count()
-    fp = sim._read_fingerprint(path)
-    # recreate the crash state: the applied batch's staging dir survives
-    # (the real sweep happens in a finally a kill skips) — a fresh staging
-    # with the SAME manifest token stands in for it
-    staging = f"{path}__staging_deadbeef"
-    os.makedirs(os.path.join(staging, "cell_id=0"))
-    sim._write_append_manifest(
-        staging,
-        sim._corpus_fingerprint(batch, "vec_id"),
-        "cp:b5",
-        sim._centroid_token(spark, path),
-    )
-    rep = sim.ivf_index_repair(spark, "t_applied_idx")
-    assert rep["consistent"]
-    assert any("already-applied batch" in a for a in rep["actions"])
-    assert not glob.glob(f"{path}__staging_*")
-    assert spark.read.parquet(path).count() == rows
-    assert sim._read_fingerprint(path) == fp
-
-
-@pytest.mark.slow  # crash-injection lifecycle test (slow tier)
-def test_ivf_repair_handles_compaction_aside_plus_crashed_append(spark, sf_dir):
-    """Combined damage (reachable via operator error: a compaction crash,
-    a manual lock removal WITHOUT repair, then an append crash): repair
-    fixes the cell-level asides FIRST, so the append roll-forward's
-    content validation sees healthy cells and completes — instead of
-    misreading the hidden aside rows as fingerprint drift and forcing a
-    rebuild."""
-    import glob
-    import os
-
-    import pyspark.sql.functions as F
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.where(F.col("vec_id") % 50 != 17)
-    b0 = emb.where(F.col("vec_id") % 150 == 17)
-    b1 = emb.where(F.col("vec_id") % 150 == 67)
-    sim.build_ivf_index(base, index_name="t_combo_idx")
-    sim.ivf_index_append(b0, index_name="t_combo_idx")
-    path = sim._ivf_index_path(spark, "t_combo_idx")
-
-    # damage 1: compaction killed after hiding all of one cell's files
-    cells = sorted(glob.glob(os.path.join(path, "cell_id=*")))
-    cell_dir = max(
-        cells, key=lambda d: len(glob.glob(os.path.join(d, "*.parquet")))
-    )
-    for p in glob.glob(os.path.join(cell_dir, "*.parquet")):
-        os.rename(p, os.path.join(cell_dir, f".{os.path.basename(p)}.old"))
-
-    # damage 2: an append killed mid-publish (operator error: nothing was
-    # repaired in between)
-    calls = {"n": 0}
-
-    def trig(src, dst):
-        if "__staging_" in src and "cell_id=" in dst and dst.endswith(".parquet"):
-            calls["n"] += 1
-            return calls["n"] == 2
-        return False
-
-    with _dead_process_at(trig):
-        with pytest.raises(OSError, match="simulated process kill"):
-            sim.ivf_index_append(
-                b1, index_name="t_combo_idx", idempotency_token="cp:b9"
-            )
-
-    rep = sim.ivf_index_repair(spark, "t_combo_idx", break_lock=True)
-    assert rep["consistent"]
-    assert any("pre-compaction originals" in a for a in rep["actions"])
-    assert any("rolled crashed append forward" in a for a in rep["actions"])
-    assert sim._read_fingerprint(path)["last_token"] == "cp:b9"
-    # final contents = base ∪ b0 ∪ b1, probe-identical to the in-memory IVF
-    got = sorted(
-        tuple(r)
-        for r in sim.ivf_index_probe(
-            emb.where(F.col("vec_id") < 10),
-            k=5,
-            index_name="t_combo_idx",
-            expected_corpus=emb.where(
-                (F.col("vec_id") % 50 != 17)
-                | (F.col("vec_id") % 150 == 17)
-                | (F.col("vec_id") % 150 == 67)
-            ),
-        ).collect()
-    )
-    assert len(got) > 0
-
-
-def test_index_path_refuses_object_store_warehouse():
-    """The stored-index durability layer is POSIX-only (atomic rename +
-    O_EXCL); pointing the warehouse at an object store must refuse LOUDLY
-    at path resolution — the alternative is os.path.join treating
-    's3a://bucket/wh' as a relative local dir and every atomicity promise
-    silently not holding on the real store."""
-    import pytest
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-
-    class _FakeConf:
-        def __init__(self, uri):
-            self._uri = uri
-
-        def get(self, key, default=None):
-            assert key == "spark.sql.warehouse.dir"
-            return self._uri
-
-    class _FakeSpark:
-        def __init__(self, uri):
-            self.conf = _FakeConf(uri)
-
-    for uri in (
-        "s3a://bucket/warehouse",
-        "s3://bucket/warehouse",
-        "gs://bucket/warehouse",
-        "abfss://fs@acct.dfs.core.windows.net/wh",
-    ):
-        with pytest.raises(
-            sim.UnsupportedIndexFilesystem, match="atomic rename"
-        ) as exc:
-            sim._ivf_index_path(_FakeSpark(uri), "any_index")
-        # the refusal names the offending URI and points at the contract doc
-        assert uri in str(exc.value)
-        assert "COVERAGE.md" in str(exc.value)
-
-
-def test_require_posix_warehouse_accepts_local_forms():
-    """Local paths and file: URIs (Spark local mode reports file:/...)
-    both resolve to the plain OS path."""
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        _require_posix_warehouse,
-    )
-
-    assert _require_posix_warehouse("spark-warehouse") == "spark-warehouse"
-    assert _require_posix_warehouse("/abs/warehouse") == "/abs/warehouse"
-    assert _require_posix_warehouse("file:/abs/warehouse") == "/abs/warehouse"
-    # a colon inside a PATH segment is not a scheme — 'runs' must not be
-    # classified as an object store
-    assert _require_posix_warehouse("runs:2026/idx") == "runs:2026/idx"
-    assert _require_posix_warehouse("/data/runs:2026/idx") == "/data/runs:2026/idx"
-    # file://host/path: the authority is dropped, not glued onto the path
-    assert _require_posix_warehouse("file:///abs/warehouse") == "/abs/warehouse"
-    assert _require_posix_warehouse("file://localhost/abs/wh") == "/abs/wh"
-    # '#' and '?' are legal filename characters — URL fragment/query
-    # parsing must not truncate a file: path at them
-    assert _require_posix_warehouse("file:/data/run#3/wh") == "/data/run#3/wh"
-    assert _require_posix_warehouse("/data/run#3/wh") == "/data/run#3/wh"
-    # a head that cannot be an RFC 3986 scheme (slash inside, leading
-    # digit) is a local path even when a '/' follows the colon
-    assert _require_posix_warehouse("data/v1:/idx") == "data/v1:/idx"
-    assert _require_posix_warehouse("2026:/idx") == "2026:/idx"
-    # file:<relative> normalizes to the relative path Hadoop would
-    # resolve it to — NOT a literal './file:rel' directory (split-brain)
-    assert _require_posix_warehouse("file:rel/wh") == "rel/wh"
-    # bare 'file:' must refuse, not return '' (which os.path.join would
-    # silently resolve to the current working directory)
-    with pytest.raises(ValueError, match="bare URI 'file:'"):
-        _require_posix_warehouse("file:")
-
-
-def test_require_posix_warehouse_refuses_single_slash_uris():
-    """Hadoop URIs appear as scheme:/path as well as scheme://auth/path
-    ('hdfs:/user/hive/warehouse' is a common form) — BOTH must refuse,
-    or the index splits brain: os.* state under a local dir literally
-    named 'hdfs:' while Spark resolves the real filesystem."""
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        UnsupportedIndexFilesystem,
-        _require_posix_warehouse,
-    )
-
-    for uri in ("hdfs:/user/hive/warehouse", "s3a:/bucket/wh", "viewfs:/cluster/wh"):
-        with pytest.raises(UnsupportedIndexFilesystem, match="atomic rename"):
-            _require_posix_warehouse(uri)
-
-
-def test_lock_payload_names_holder(spark, sf_dir):
-    """The writer lock carries {host, pid, acquired_utc} so contention
-    errors and ivf_index_verify can answer the post-mortem question
-    'whose lock is this' — the gate for repair(break_lock=True)."""
-    import json
-    import os
-    import socket
-
-    import pytest
-    import pyspark.sql.functions as F
-
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators import similarity as sim
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    sim.build_ivf_index(
-        emb.where(F.col("vec_id") < 400), index_name="t_lockpayload_idx"
-    )
-    path = sim._ivf_index_path(spark, "t_lockpayload_idx")
-    lock_file = os.path.join(f"{path}__meta", "append.lock")
-
-    with sim._index_write_lock(path):
-        with open(lock_file) as fh:
-            payload = json.load(fh)
-        assert payload["pid"] == os.getpid()
-        assert payload["host"] == socket.gethostname()
-        assert "acquired_utc" in payload
-        # a contender's error message names the holder...
-        with pytest.raises(
-            sim.ConcurrentIndexMutation,
-            match=rf"held by pid {os.getpid()} on ",
-        ):
-            with sim._index_write_lock(path):
-                pass
-        # ...and verify surfaces it WITHOUT flipping consistent (a live
-        # writer's lock is normal operation, not damage)
-        report = sim.ivf_index_verify(spark, "t_lockpayload_idx")
-        assert report["lock_holder"]["pid"] == os.getpid()
-        assert report["consistent"]
-
-    # lock released: no holder reported
-    assert sim.ivf_index_verify(spark, "t_lockpayload_idx")["lock_holder"] is None
-
-
-def test_lock_holder_read_tolerates_legacy_empty_lock(tmp_path):
-    """An empty/torn lock file (older version, hand-placed, crash before
-    the payload write) must read as 'holder unknown', never crash the
-    contention path."""
-    from glue_job_to_write_structured_data_on_s3_full_code_spark.operators.similarity import (
-        _read_lock_holder,
-    )
-
-    empty = tmp_path / "append.lock"
-    empty.write_text("")
-    assert _read_lock_holder(str(empty)) is None
-    torn = tmp_path / "torn.lock"
-    torn.write_text('{"host": "h", "pi')
-    assert _read_lock_holder(str(torn)) is None
-    assert _read_lock_holder(str(tmp_path / "missing.lock")) is None

@@ -2028,3 +2028,87 @@ def test_perceptual_hash_decode_mode_collides_scale_duplicates(spark):
     ).select("doc_id", "payload")
     h = perceptual_hash(resized, grid=32, block=4, decode=True).collect()
     assert h[0].phash == hashes[1]
+
+
+def test_app_staging_dir_refuses_object_store_warehouse():
+    """Driver-local staging (staged results, default index roots, Derby
+    databases) is os.* code; pointing the warehouse at an object store
+    must refuse LOUDLY at path resolution — the alternative is
+    os.path.join treating 's3a://bucket/wh' as a relative local dir and
+    every atomicity promise silently not holding on the real store."""
+    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources import parquet
+
+    class _FakeConf:
+        def __init__(self, uri):
+            self._uri = uri
+
+        def get(self, key, default=None):
+            assert key == "spark.sql.warehouse.dir"
+            return self._uri
+
+    class _FakeSpark:
+        def __init__(self, uri):
+            self.conf = _FakeConf(uri)
+
+    for uri in (
+        "s3a://bucket/warehouse",
+        "s3://bucket/warehouse",
+        "gs://bucket/warehouse",
+        "abfss://fs@acct.dfs.core.windows.net/wh",
+    ):
+        with pytest.raises(
+            parquet.UnsupportedIndexFilesystem, match="atomic rename"
+        ) as exc:
+            parquet._app_staging_dir(_FakeSpark(uri))
+        # the refusal names the offending URI and points at the contract doc
+        assert uri in str(exc.value)
+        assert "COVERAGE.md" in str(exc.value)
+
+
+def test_require_posix_warehouse_accepts_local_forms():
+    """Local paths and file: URIs (Spark local mode reports file:/...)
+    both resolve to the plain OS path."""
+    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources.parquet import (
+        _require_posix_warehouse,
+    )
+
+    assert _require_posix_warehouse("spark-warehouse") == "spark-warehouse"
+    assert _require_posix_warehouse("/abs/warehouse") == "/abs/warehouse"
+    assert _require_posix_warehouse("file:/abs/warehouse") == "/abs/warehouse"
+    # a colon inside a PATH segment is not a scheme — 'runs' must not be
+    # classified as an object store
+    assert _require_posix_warehouse("runs:2026/idx") == "runs:2026/idx"
+    assert _require_posix_warehouse("/data/runs:2026/idx") == "/data/runs:2026/idx"
+    # file://host/path: the authority is dropped, not glued onto the path
+    assert _require_posix_warehouse("file:///abs/warehouse") == "/abs/warehouse"
+    assert _require_posix_warehouse("file://localhost/abs/wh") == "/abs/wh"
+    # '#' and '?' are legal filename characters — URL fragment/query
+    # parsing must not truncate a file: path at them
+    assert _require_posix_warehouse("file:/data/run#3/wh") == "/data/run#3/wh"
+    assert _require_posix_warehouse("/data/run#3/wh") == "/data/run#3/wh"
+    # a head that cannot be an RFC 3986 scheme (slash inside, leading
+    # digit) is a local path even when a '/' follows the colon
+    assert _require_posix_warehouse("data/v1:/idx") == "data/v1:/idx"
+    assert _require_posix_warehouse("2026:/idx") == "2026:/idx"
+    # file:<relative> normalizes to the relative path Hadoop would
+    # resolve it to — NOT a literal './file:rel' directory (split-brain)
+    assert _require_posix_warehouse("file:rel/wh") == "rel/wh"
+    # bare 'file:' must refuse, not return '' (which os.path.join would
+    # silently resolve to the current working directory)
+    with pytest.raises(ValueError, match="bare URI 'file:'"):
+        _require_posix_warehouse("file:")
+
+
+def test_require_posix_warehouse_refuses_single_slash_uris():
+    """Hadoop URIs appear as scheme:/path as well as scheme://auth/path
+    ('hdfs:/user/hive/warehouse' is a common form) — BOTH must refuse,
+    or state splits brain: os.* state under a local dir literally named
+    'hdfs:' while Spark resolves the real filesystem."""
+    from glue_job_to_write_structured_data_on_s3_full_code_spark.sources.parquet import (
+        UnsupportedIndexFilesystem,
+        _require_posix_warehouse,
+    )
+
+    for uri in ("hdfs:/user/hive/warehouse", "s3a:/bucket/wh", "viewfs:/cluster/wh"):
+        with pytest.raises(UnsupportedIndexFilesystem, match="atomic rename"):
+            _require_posix_warehouse(uri)
